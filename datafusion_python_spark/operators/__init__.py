@@ -1,9 +1,13 @@
 """Beyond-parity operators for large-scale training-data pipelines.
 
-Everything here is built from Spark built-ins (higher-order functions,
-hash functions, window/group ops) so it stays inside whole-stage codegen
-and scales horizontally — no Python in the hot path. The multimodal
-module is the one exception (Pandas-UDF plumbing with stubbed decoders).
+Operators are built from Spark built-ins (hash functions, window/group
+ops, higher-order functions) and scale horizontally. Where a per-row
+fold would run as interpreted higher-order lambdas — the MinHash
+family-min, the SimHash bit vote, and the embedding dot products behind
+cosine top-k, IVF assignment and random projection — the operator runs
+a vectorized numpy kernel over Arrow batches instead (``mapInArrow`` /
+``applyInPandas``, map-only or one keyed shuffle). The multimodal
+module uses Pandas-UDF plumbing for its codecs.
 """
 
 from .dedup import (
@@ -14,17 +18,14 @@ from .dedup import (
     near_dup_pairs_lsh,
     ngram_jaccard_pairs,
     ngram_jaccard_pairs_prefix,
-    minhash_signature_arrow,
     simhash,
-    simhash_arrow,
     simhash_near_dups,
 )
 from .similarity import (
     cosine_near_dup_pairs_arrow,
     cosine_similarity_col,
     cosine_topk,
-    cosine_topk_arrow,
-    ivf_assign_arrow,
+    ivf_assign,
     lsh_bucket_ann,
 )
 from .text import (
@@ -40,7 +41,7 @@ from .fuzzy import fuzzy_join, fuzzy_self_pairs, qgrams
 from .skew import salted_agg, salted_join
 from .layout import bucketize, zorder_layout, zvalue
 from .lm import perplexity, train_bigram_counts
-from .projection import projection_signs, random_projection, random_projection_arrow
+from .projection import projection_signs, random_projection
 from .quantize import dequantize, quantize_embeddings, reconstruction_rmse
 from .ranking import bm25, doc_frequencies, doc_terms, tf_idf
 from .sampling import (
@@ -95,7 +96,6 @@ __all__ = [
     "hll_partial",
     "projection_signs",
     "random_projection",
-    "random_projection_arrow",
     "tf_idf",
     "contamination_report",
     "decontaminate",
@@ -117,15 +117,12 @@ __all__ = [
     "ngram_jaccard_pairs",
     "ngram_jaccard_pairs_prefix",
     "near_dup_pairs_lsh",
-    "minhash_signature_arrow",
     "simhash",
-    "simhash_arrow",
     "simhash_near_dups",
     "cosine_near_dup_pairs_arrow",
     "cosine_similarity_col",
     "cosine_topk",
-    "cosine_topk_arrow",
-    "ivf_assign_arrow",
+    "ivf_assign",
     "lsh_bucket_ann",
     "doc_fingerprint",
     "language_id",

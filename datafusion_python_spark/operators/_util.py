@@ -2,116 +2,6 @@
 
 from __future__ import annotations
 
-import os
-
-# Memoized result of the one-per-process OpenBLAS kernel probe: the value
-# to set OPENBLAS_CORETYPE to in Python workers, or None when the default
-# dynamic detection is already fine. Ellipsis = not probed yet.
-_BLAS_CORETYPE: str | None | type(Ellipsis) = Ellipsis
-
-
-def _probe_matmul_gflops(coretype: str | None) -> float:
-    """GFLOP/s of a small float64 matmul in a fresh subprocess with
-    ``OPENBLAS_CORETYPE`` set to ``coretype`` (None = library default).
-    A subprocess is required: OpenBLAS reads the variable once at load,
-    so the current process (whose numpy is long imported) can't re-test
-    kernels. Returns -1.0 on any failure (e.g. a kernel the CPU can't
-    execute dies with SIGILL — that candidate is simply not chosen)."""
-    import subprocess
-    import sys
-
-    code = (
-        "import time,numpy as np;"
-        "a=np.random.rand(768,64);b=np.random.rand(64,768);a@b;"
-        "t0=time.perf_counter()\n"
-        "for _ in range(16): a@b\n"
-        "import sys;sys.stdout.write(str(time.perf_counter()-t0))"
-    )
-    env = dict(os.environ)
-    env.pop("OPENBLAS_CORETYPE", None)
-    if coretype:
-        env["OPENBLAS_CORETYPE"] = coretype
-    # single-threaded like the pinned workers (session.py *_NUM_THREADS=1)
-    env["OPENBLAS_NUM_THREADS"] = "1"
-    try:
-        out = subprocess.run(
-            [sys.executable, "-c", code], env=env, capture_output=True, timeout=120
-        )
-        t = float(out.stdout)
-    except Exception:
-        return -1.0
-    return 2.0 * 768 * 768 * 64 * 16 / max(t, 1e-9) / 1e9
-
-
-def blas_coretype_override() -> str | None:
-    """The OPENBLAS_CORETYPE to pin in Python workers, or None.
-
-    Some sandbox VMs execute the kernel family OpenBLAS's DYNAMIC_ARCH
-    picks pathologically slowly: this host's masked CPUID detects as
-    SapphireRapids (verified via ``openblas_get_corename``), whose
-    AVX-512 kernels intermittently run at ~1 GFLOP/s while the HASWELL
-    (AVX2/FMA) kernel measures ~97 GFLOP/s back-to-back — a ~100x
-    slowdown of every matmul-bound operator (SemDeDup cell kernels, IVF
-    assignment, cosine top-k, random projection). Probed empirically
-    once per process: candidate kernels gated on the CPU's feature
-    flags are timed in subprocesses against the library default
-    (best-of-2 for the default, so a transient stall can't fake a gap),
-    and a candidate is chosen only when it wins DECISIVELY (>=4x) — on
-    hosts where the default behaves, this returns None and nothing
-    changes; in the pathological regime the measured gap is two orders
-    of magnitude and clears the bar through any noise. An explicit
-    OPENBLAS_CORETYPE in the environment wins outright (documented
-    override path, README "Session defaults")."""
-    global _BLAS_CORETYPE
-    if _BLAS_CORETYPE is not Ellipsis:
-        return _BLAS_CORETYPE
-    explicit = os.environ.get("OPENBLAS_CORETYPE")
-    if explicit:
-        _BLAS_CORETYPE = explicit
-        return explicit
-    flags = ""
-    try:
-        with open("/proc/cpuinfo") as fh:
-            flags = fh.read()
-    except OSError:
-        pass
-    candidates = [
-        ct
-        for ct, flag in (("HASWELL", " avx2"), ("SKYLAKEX", " avx512f"))
-        if flag in flags
-    ]
-    result = None
-    if candidates:
-        base = max(_probe_matmul_gflops(None), _probe_matmul_gflops(None))
-        best_g = max(base, 0.0) * 4.0
-        for ct in candidates:
-            g = _probe_matmul_gflops(ct)
-            if g > best_g:
-                result, best_g = ct, g
-    _BLAS_CORETYPE = result
-    return result
-
-
-def ensure_fast_blas(spark) -> None:
-    """Pin the probed OpenBLAS kernel family into this session's Python
-    worker environment (no-op when the default detection is fine).
-
-    Mutates ``sparkContext.environment`` — the dict PySpark snapshots
-    into every subsequently created Python function's worker env (the
-    same channel the session's ``spark.executorEnv.*_NUM_THREADS`` pins
-    ride) — so it works on ANY session, including a vanilla one built
-    outside :func:`session.get_spark` (the grading driver's). Call
-    before building a mapInArrow/applyInPandas kernel."""
-    ct = blas_coretype_override()
-    if not ct:
-        return
-    try:
-        env = spark.sparkContext.environment
-        if env.get("OPENBLAS_CORETYPE") != ct:
-            env["OPENBLAS_CORETYPE"] = ct
-    except Exception:
-        pass
-
 
 def shuffle_partitions(spark, default: int = 200) -> int:
     """The session's ``spark.sql.shuffle.partitions`` as an int.

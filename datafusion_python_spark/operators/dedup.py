@@ -1,10 +1,13 @@
 """Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard.
 
-All variants are pure DataFrame compositions (xxhash64 / higher-order
+All variants are DataFrame compositions (xxhash64 / higher-order
 functions / shuffle-on-key joins), so at 100 TB they run as ordinary
 shuffles with map-side combine — no driver materialization, no Python
-row loop. Candidate generation (LSH bands / simhash blocks) keeps the
-pair space linear-ish in corpus size instead of the O(n²) self-join.
+row loop. The two per-row hot folds, the MinHash family-min and the
+SimHash bit vote, run as vectorized numpy kernels over Arrow batches
+(``mapInArrow``, still map-only). Candidate generation (LSH bands /
+simhash blocks) keeps the pair space linear-ish in corpus size instead
+of the O(n²) self-join.
 """
 
 from __future__ import annotations
@@ -100,50 +103,30 @@ def minhash_signature(
     num_hashes: int = 32,
     shingle_k: int = 3,
     hasher: str = "xxhash64",
-    arrow: bool | None = None,
 ) -> DataFrame:
     """Append a ``minhash`` array<bigint> column (one min per hash family).
 
-    Three staged projections: (1) the word array; (2) one 64-bit hash per
-    shingle (hash-native, no shingle strings); (3) family i = min over
-    shingles of xxhash64(h, i) — re-hashing a long per family instead of
-    re-hashing the text. The staging is load-bearing: HOFs run
-    interpreted with no subexpression elimination, and CollapseProject
-    refuses to duplicate non-cheap aliases, so each stage evaluates
-    exactly once per row. Zero shuffles.
+    xxhash64 mode (production): the word array and one 64-bit hash per
+    word k-shingle stage JVM-side (hash-native, no shingle strings),
+    then a numpy/Arrow kernel (``mapInArrow``) takes family i = min over
+    shingles of ``xxhash64(h, i)``: per batch, ONE vectorized
+    ``hashLong`` over the flattened shingle buffer, then one ``hashInt``
+    + segmented signed min per family. The numpy XXH64 twins below are
+    bit-exact against Spark's ``xxhash64`` (pytest-pinned), so the
+    signature equals Spark's ``transform``/``array_min`` fold over
+    ``xxhash64(h, i)``, which would cost num_hashes × shingles
+    interpreted lambda steps per row. Map-only, zero shuffles; all
+    input columns carried.
 
     ``hasher="md5"`` derives family i as md5_int(shingle || '#' || i)
-    over shingle STRINGS — slower (32-bit keys, string concat per
-    family) but bit-identical in any engine with md5, which is what
-    lets the LSH gate run against a full DuckDB oracle. Production use
-    stays on xxhash64.
+    over shingle STRINGS on the JVM — slower (32-bit keys, string
+    concat per family) but bit-identical in any engine with md5, which
+    is what lets the LSH gate run against a full DuckDB oracle.
 
-    The xxhash64 path ROUTES TO THE ARROW KERNEL by default (r12,
-    VERDICT r11 ask #4): with the r11 input spread in place the JVM
-    interpreted num_hashes x shingles fold is the remaining cost of
-    candidate generation, and the numpy twin (bit-identical signatures,
-    pytest-pinned) halves the LSH pipeline end-to-end — 64x corpus,
-    shingle_k=3, interleaved A/B, 4-0 rounds: JVM 15.6/18.7/16.2/23.3 s
-    vs arrow 9.3/11.3/8.6/8.7 s (medians 17.4 -> 9.0); sf0.1/k=1 is
-    parity-to-better (3-1, medians 6.98 -> 6.72). Candidate sets
-    checksum-identical per arm. ``arrow=False`` forces the JVM fold
-    (the parity tests pin the two paths bit-equal with it); md5 always
-    stays JVM (no vectorized twin, and it is the oracle mode).
+    The input is spread first (see spread_small_input): every
+    projection up to the first exchange rides the scan's parallelism,
+    and the signature stage is the costliest map work in the module.
     """
-    if arrow is None:
-        arrow = hasher == "xxhash64"
-    if arrow:
-        if hasher != "xxhash64":
-            raise ValueError("arrow minhash kernel requires hasher='xxhash64'")
-        return minhash_signature_arrow(
-            spread_small_input(df), text_col, num_hashes=num_hashes,
-            shingle_k=shingle_k,
-        )
-    # Spread a few-partition input before the expensive per-doc fold:
-    # every projection up to the first exchange rides the scan's
-    # parallelism, and the num_hashes × shingles fold is the costliest
-    # map work in the module (no-op at production scale — see
-    # spread_small_input).
     df = spread_small_input(df)
     if hasher == "md5":
         w, tmp = "__mh_words", "__mh_shs"
@@ -175,97 +158,7 @@ def minhash_signature(
         return staged.withColumn("minhash", sig).drop(tmp)
     if hasher != "xxhash64":
         raise ValueError("hasher must be 'xxhash64' or 'md5'")
-    w, tmp = "__mh_words", "__mh_shh"
-    staged = (
-        df.withColumn(
-            w, F.filter(F.split(_norm_text(F.col(text_col)), " "), lambda x: x != "")
-        )
-        .withColumn(tmp, _shingle_hashes_from_words(F.col(w), shingle_k))
-        .drop(w)
-    )
-    sig = F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(F.transform(F.col(tmp), lambda h: F.xxhash64(h, i))),
-    )
-    return staged.withColumn("minhash", sig).drop(tmp)
 
-
-def _xxh64_avalanche(h):
-    import numpy as np
-
-    h ^= h >> np.uint64(33)
-    h *= np.uint64(0xC2B2AE3D27D4EB4F)
-    h ^= h >> np.uint64(29)
-    h *= np.uint64(0x165667B19E3779F9)
-    h ^= h >> np.uint64(32)
-    return h
-
-
-def _xxh64_long(value_u64, seed_u64):
-    """Vectorized XXH64.hashLong — bit-identical to Spark's
-    ``xxhash64`` over a single LongType column (parity pinned in
-    tests/test_similarity_arrow.py against F.xxhash64)."""
-    import numpy as np
-
-    def rotl(x, r):
-        return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
-
-    h = seed_u64 + np.uint64(0x27D4EB2F165667C5) + np.uint64(8)
-    k1 = rotl(value_u64 * np.uint64(0xC2B2AE3D27D4EB4F), 31) * np.uint64(
-        0x9E3779B185EBCA87
-    )
-    h ^= k1
-    h = rotl(h, 27) * np.uint64(0x9E3779B185EBCA87) + np.uint64(0x85EBCA77C2B2AE63)
-    return _xxh64_avalanche(h)
-
-
-def _xxh64_int(value_u32, seed_u64):
-    """Vectorized XXH64.hashInt — Spark hashes IntegerType through the
-    4-byte path, so ``xxhash64(h, i)`` chains hashLong then hashInt."""
-    import numpy as np
-
-    def rotl(x, r):
-        return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
-
-    h = seed_u64 + np.uint64(0x27D4EB2F165667C5) + np.uint64(4)
-    k1 = (value_u32.astype(np.uint64) & np.uint64(0xFFFFFFFF)) * np.uint64(
-        0x9E3779B185EBCA87
-    )
-    h ^= k1
-    h = rotl(h, 23) * np.uint64(0xC2B2AE3D27D4EB4F) + np.uint64(0x165667B19E3779F9)
-    return _xxh64_avalanche(h)
-
-
-def minhash_signature_arrow(
-    df: DataFrame,
-    text_col: str,
-    num_hashes: int = 32,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """``minhash_signature`` (xxhash64 mode) with the family-min stage
-    in a numpy/Arrow kernel.
-
-    The shingle HASHES still stage JVM-side with the exact expressions
-    of :func:`minhash_signature` (identical values, including the
-    null/short-text degenerate single-hash rows), so signatures are
-    identical by construction given the numpy xxh64 twins above are
-    bit-exact — what moves to the kernel is the num_hashes × shingles
-    interpreted ``transform``/``array_min`` folds: per batch, ONE
-    vectorized ``hashLong`` over the flattened shingle buffer, then
-    one ``hashInt`` + segmented signed-min per family. Same map-only
-    shape. The md5 mode (used by the DuckDB-oracle gates) keeps the
-    JVM path — its per-family string-concat md5 has no vectorized
-    twin, and the production mode is xxhash64 anyway.
-
-    Measured (64× pipescale corpus): signature stage 10.4 s → 4.9 s.
-    r11 measured the LSH pipeline end-to-end as unchanged (~7 s either
-    way) and kept the JVM fold default — but that reading predated the
-    r11 input spread. Re-measured r12 WITH the spread on both arms
-    (interleaved, 64×/k=3): JVM fold 15.6-23.3 s vs arrow 8.6-11.3 s
-    end-to-end, 4-0 rounds, candidate sets checksum-identical — so
-    :func:`minhash_signature` now routes its xxhash64 path here by
-    default (``arrow=False`` forces the JVM fold).
-    """
     import numpy as np
     import pyarrow as pa
 
@@ -281,9 +174,8 @@ def minhash_signature_arrow(
     )
     out_schema = StructType(
         list(df.schema.fields)
-        # element nullability TRUE to match the JVM fold exactly: at
-        # shingle_k=1 an empty/null text stages an empty/null hash
-        # array, and array_min over it is NULL per family
+        # element nullability TRUE: at shingle_k=1 an empty/null text
+        # stages an empty/null hash array, whose min is NULL per family
         + [StructField("minhash", ArrayType(LongType(), True), False)]
     )
     carry = [f.name for f in df.schema.fields]
@@ -299,9 +191,9 @@ def minhash_signature_arrow(
                 dtype=np.int64,
             )
             # k=1 degenerates (empty/null text -> empty/null hash array):
-            # the JVM fold yields array_min(empty) = NULL per family —
-            # emit the identical [null]*num_hashes row. For k >= 2 the
-            # staging guarantees >= 1 hash per row, so nz is all-true.
+            # emit [null]*num_hashes, as array_min over an empty array
+            # does. For k >= 2 the staging guarantees >= 1 hash per row,
+            # so nz is all-true.
             nz = lens > 0
             sig = np.zeros((n, num_hashes), dtype=np.int64)
             if nz.any():
@@ -316,7 +208,7 @@ def minhash_signature_arrow(
                 inner = _xxh64_long(flat.view(np.uint64), np.uint64(42))
                 for i in range(num_hashes):
                     fam = _xxh64_int(np.uint32(i), inner).view(np.int64)
-                    # JVM array_min compares SIGNED longs
+                    # Spark's array_min compares SIGNED longs
                     sig[nz, i] = np.minimum.reduceat(fam, starts)
             offsets = pa.array(np.arange(n + 1, dtype=np.int32) * num_hashes)
             null_mask = np.repeat(~nz, num_hashes)
@@ -327,6 +219,57 @@ def minhash_signature_arrow(
             yield pa.RecordBatch.from_arrays(arrs + [mh], names=carry + ["minhash"])
 
     return staged.mapInArrow(kernel, out_schema)
+
+
+def _xxh64_avalanche(h):
+    import numpy as np
+
+    h ^= h >> np.uint64(33)
+    h *= np.uint64(0xC2B2AE3D27D4EB4F)
+    h ^= h >> np.uint64(29)
+    h *= np.uint64(0x165667B19E3779F9)
+    h ^= h >> np.uint64(32)
+    return h
+
+
+def _rotl64(x, r: int):
+    import numpy as np
+
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def _xxh64_long(value_u64, seed_u64):
+    """Vectorized XXH64.hashLong — bit-identical to Spark's
+    ``xxhash64`` over a single LongType column (parity pinned in
+    tests/test_similarity_arrow.py against F.xxhash64). Inputs are
+    lifted to arrays: numpy wraps uint64 array arithmetic silently but
+    warns on scalar overflow, and the wraparound is the algorithm."""
+    import numpy as np
+
+    value_u64, seed_u64 = np.atleast_1d(value_u64), np.atleast_1d(seed_u64)
+    h = seed_u64 + np.uint64(0x27D4EB2F165667C5) + np.uint64(8)
+    k1 = _rotl64(value_u64 * np.uint64(0xC2B2AE3D27D4EB4F), 31) * np.uint64(
+        0x9E3779B185EBCA87
+    )
+    h = h ^ k1
+    h = _rotl64(h, 27) * np.uint64(0x9E3779B185EBCA87) + np.uint64(0x85EBCA77C2B2AE63)
+    return _xxh64_avalanche(h)
+
+
+def _xxh64_int(value_u32, seed_u64):
+    """Vectorized XXH64.hashInt — Spark hashes IntegerType through the
+    4-byte path, so ``xxhash64(h, i)`` chains hashLong then hashInt.
+    Scalar inputs are lifted to arrays like :func:`_xxh64_long`."""
+    import numpy as np
+
+    value_u32, seed_u64 = np.atleast_1d(value_u32), np.atleast_1d(seed_u64)
+    h = seed_u64 + np.uint64(0x27D4EB2F165667C5) + np.uint64(4)
+    k1 = (value_u32.astype(np.uint64) & np.uint64(0xFFFFFFFF)) * np.uint64(
+        0x9E3779B185EBCA87
+    )
+    h = h ^ k1
+    h = _rotl64(h, 23) * np.uint64(0xC2B2AE3D27D4EB4F) + np.uint64(0x165667B19E3779F9)
+    return _xxh64_avalanche(h)
 
 
 def lsh_candidate_pairs(
@@ -371,14 +314,12 @@ def lsh_candidate_pairs(
 
 
 def _simhash_word_hashes(df: DataFrame, text_col: str, hasher: str) -> DataFrame:
-    """Stage the per-word hash array once (own projection — inlining it
-    into the bit-lambdas would re-split and re-hash the text bits×
-    per row). Shared verbatim by the JVM and Arrow vote stages, which
-    is what makes their signatures identical by construction.
+    """Stage the per-word hash array once, JVM-side: the xxhash64 and
+    md5-conv word hashes are engine hashes a Python kernel can't
+    reproduce bit-for-bit, so only the bit vote moves to numpy.
 
     The input is spread first (see spread_small_input): the vote stage
-    downstream — words × bits interpreted folds (JVM) or the Arrow
-    kernel — is the costliest map work in the simhash family and rides
+    downstream is the costliest map work in the simhash family and rides
     the scan's parallelism; a single-row-group corpus runs it serially
     otherwise. No-op at production scale."""
     df = spread_small_input(df)
@@ -397,56 +338,21 @@ def _simhash_word_hashes(df: DataFrame, text_col: str, hasher: str) -> DataFrame
 def simhash(
     df: DataFrame, text_col: str, out_col: str = "simhash", hasher: str = "xxhash64"
 ) -> DataFrame:
-    """SimHash of the word stream, computed with nested HOFs.
+    """SimHash of the word stream.
 
     For each bit position b: sum over words of ±1 depending on bit b of
-    the word hash; sign of the sum sets bit b. All codegen — the nested
-    transform/aggregate stays JVM-side.
+    the word hash; sign of the sum sets bit b. The word hashes stage
+    JVM-side (:func:`_simhash_word_hashes`); the vote runs in a
+    numpy/Arrow kernel (``mapInArrow``) as one ``bincount`` per bit over
+    the flattened hash buffer — vectorized, allocation-bounded (one
+    word-length temp per bit). An interpreted ``aggregate`` fold would
+    cost words × bits lambda steps per row. Empty and null texts yield
+    signature 0. Map-only — no shuffle, all input columns carried.
 
     hasher: ``xxhash64`` → 64-bit signature (production);
     ``md5`` → 60-bit signature from the first 15 md5 hex chars — fits a
     signed BIGINT in any engine, making the whole pipeline
     oracle-checkable cross-engine.
-    """
-    bits = 64 if hasher == "xxhash64" else 60
-    staged = _simhash_word_hashes(df, text_col, hasher)
-    sums = F.transform(
-        F.sequence(F.lit(0), F.lit(bits - 1)),
-        lambda b: F.aggregate(
-            F.col("_sh_hashes"),
-            F.lit(0),
-            lambda acc, h: acc + F.when(F.getbit(h, b) == 1, 1).otherwise(-1),
-        ),
-    )
-    out = staged.withColumn("_sh_sums", sums).drop("_sh_hashes")
-    sig = F.lit(0).cast("long")
-    for i in range(bits):
-        # two's-complement literal for bit 63 (1<<63 overflows signed long)
-        bitval = (1 << i) if i < 63 else -(1 << 63)
-        sig = sig.bitwiseOR(
-            F.when(F.col("_sh_sums")[i] > 0, F.lit(bitval).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return out.withColumn(out_col, sig).drop("_sh_sums")
-
-
-def simhash_arrow(
-    df: DataFrame, text_col: str, out_col: str = "simhash", hasher: str = "xxhash64"
-) -> DataFrame:
-    """``simhash`` with the bit-voting stage in a numpy/Arrow kernel.
-
-    The word HASHES still compute JVM-side with the exact expressions
-    of :func:`simhash` (xxhash64 / md5-conv — engine hashes a Python
-    kernel can't reproduce bit-for-bit), so signatures are identical
-    by construction; what moves to the kernel is the 64 interpreted
-    ``aggregate`` folds per row — the dominant cost of the JVM path
-    (Catalyst evaluates higher-order lambdas per element, so the vote
-    stage costs words × bits interpreted steps). The kernel does one
-    ``bincount`` per bit over the flattened hash buffer: vectorized,
-    allocation-bounded (one word-length temp per bit), empty word
-    lists yield signature 0 exactly like ``aggregate``'s init value.
-    Same map-only shape — no shuffle, all input columns carried.
     """
     import numpy as np
     import pyarrow as pa
@@ -516,7 +422,7 @@ def simhash_near_dups(
     recompute form is kept because this rig's graded regime (bench,
     pipescale, the driver) runs on idle hosts where recompute wins
     decisively; on a multi-node deployment at real utilization, stage
-    the signature table (one lazy localCheckpoint on the simhash_arrow
+    the signature table (one lazy localCheckpoint on the simhash
     output) before calling this. See OPTIMIZATION_r12.md.
     """
     qw = bits // 4

@@ -11,8 +11,8 @@ combined 30–60× shrink).
 The projection matrix is ±1 signs derived from md5(seed:j:i) parity —
 regenerated identically on every executor, every engine, every rerun:
 no broadcast state, no fitted model to version, and the oracle can
-reproduce it bit-for-bit. Projection itself is a per-row fold over
-staged arrays (zip_with/aggregate) — map-only, no shuffle, no Python.
+reproduce it bit-for-bit. Projection itself is one numpy matmul per
+Arrow batch (``mapInArrow``) — map-only, no shuffle.
 """
 
 from __future__ import annotations
@@ -20,7 +20,7 @@ from __future__ import annotations
 import hashlib
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -53,68 +53,24 @@ def random_projection(
     Embeddings must share one dimension; since array lengths are not in
     the schema, ``in_dim`` is inferred by probing a single row (driver-
     side, O(1) — the same probe pattern as the ANN query vector).
-    Components are rounded to 6 dp for cross-engine reproducibility.
-    """
-    probe = df.select(F.size(F.col(emb_col)).alias("n")).first()
-    if probe is None or probe["n"] is None:
-        raise ValueError("cannot infer embedding dimension from empty input")
-    in_dim = int(probe["n"])
-    signs = projection_signs(in_dim, out_dim, seed)
-    scale = 1.0 / math.sqrt(in_dim) if normalize else 1.0
-    staged = df.withColumn("__rp_emb", F.col(emb_col).cast("array<double>"))
-    emb = F.col("__rp_emb")
-    comps = [
-        F.round(
-            F.aggregate(
-                F.zip_with(
-                    emb,
-                    F.array(*[F.lit(s) for s in signs[j]]),
-                    lambda x, s: x * s,
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            * F.lit(scale),
-            6,
-        )
-        for j in range(out_dim)
-    ]
-    return staged.withColumn(out_col, F.array(*comps)).drop("__rp_emb")
+    Components are rounded to 6 dp with ``_spark_round`` — Spark's
+    HALF_UP-on-shortest-repr semantics, not np.round's half-even — for
+    cross-engine reproducibility.
 
-
-def random_projection_arrow(
-    df: DataFrame,
-    emb_col: str = "embedding",
-    out_dim: int = 16,
-    seed: int = 0,
-    out_col: str = "proj",
-    normalize: bool = True,
-) -> DataFrame:
-    """``random_projection`` with a numpy matmul kernel via mapInArrow.
-
-    The JVM form evaluates out_dim zip_with/aggregate folds per row —
-    higher-order lambdas are interpreted per element, so the cost is
-    out_dim × in_dim interpreter steps per vector. One (n × in_dim) @
-    (in_dim × out_dim) matmul per Arrow batch replaces all of it:
-    measured 13.5× at 100 k × 64-dim → 16 (8.13 s → 0.60 s), widening
-    with both dimensions. Still map-only (no shuffle, all columns
-    carried through) and bit-identical output: same sign matrix and
-    scale, and components rounded with ``_spark_round`` — Spark's
-    HALF_UP-on-shortest-repr semantics, not np.round's half-even — so
-    either kernel feeds the same downstream ANN / near-dup / quantize
-    stages. Null embeddings raise (``_batch_matrix``): the JVM twin
-    returns null components for a null row, but the flatten-reshape
-    here would silently misalign every later row instead.
+    One (n × in_dim) @ (in_dim × out_dim) matmul per Arrow batch; an
+    interpreted ``zip_with``/``aggregate`` fold costs out_dim × in_dim
+    lambda steps per vector instead (100 k × 64-dim → 16: fold 8.13 s,
+    kernel 0.60 s). Map-only, all columns carried through. A null embedding raises (``_batch_matrix``) instead of
+    yielding a null projection: the flatten-reshape would otherwise
+    silently misalign every later row.
     """
     import numpy as np
     import pyarrow as pa
 
     from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
-    from ._util import ensure_fast_blas
     from .similarity import _batch_matrix, _spark_round
 
-    ensure_fast_blas(df.sparkSession)
     probe = df.select(F.size(F.col(emb_col)).alias("n")).first()
     if probe is None or probe["n"] is None:
         raise ValueError("cannot infer embedding dimension from empty input")

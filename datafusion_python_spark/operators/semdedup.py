@@ -12,8 +12,8 @@ this is a beyond-parity pipeline op built on the IVF machinery in
 - clustering reuses :func:`..operators.similarity.ivf_centroids` —
   deterministic seeds, optional Lloyd refinement passes, and only
   ``n_clusters`` rows ever reach the driver;
-- assignment is :func:`..operators.similarity.ivf_assign` — codegen
-  argmax over compiled centroid literals, a map-only pass (no UDF, no
+- assignment is :func:`..operators.similarity.ivf_assign` — a numpy
+  argmax-cosine kernel over Arrow batches, a map-only pass (no
   broadcast state);
 - the quadratic pairwise stage is fenced inside clusters: the
   self-join keys on the cell id, so each partition holds one cluster's
@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._util import ensure_fast_blas, lpt_bins, partition_salts, shuffle_partitions
+from ._util import lpt_bins, partition_salts, shuffle_partitions
 from .similarity import ivf_assign, ivf_centroids
 
 
@@ -114,7 +114,6 @@ def semantic_dup_ids_arrow(
     import numpy as np
     import pandas as pd
 
-    ensure_fast_blas(assigned.sparkSession)
     id_t = assigned.schema[id_col].dataType.simpleString()
     out_schema = f"{id_col} {id_t}"
 
@@ -210,18 +209,18 @@ def semantic_dedup(
     near-duplicates straddling a cluster boundary are kept (the
     documented SemDeDup approximation that makes the op linear-ish).
 
-    ``arrow=True`` runs the fused Arrow plan: ``ivf_assign_arrow``
-    (one batch matmul instead of n_clusters interpreted folds per
-    row), then ONE shuffle (groupBy cell) into a per-cluster kernel
-    that emits the surviving rows directly — no dup-id distinct, no
-    LeftAnti join, and the assignment stage runs once instead of the
-    default plan's twice (the anti-join recomputes its build side).
-    Same decision rule; the only non-contract is ulp-level cosine
-    equality near ties (see :func:`semantic_dup_ids_arrow` /
-    ``ivf_assign_arrow``). PIPESCALE 64×: 244.9 s (JVM) → fused Arrow
-    well under the pair-stage-only twin's 84.6 s, because the measured
-    cost was never the matmul — it was join-row materialization plus
-    the doubled interpreted assignment.
+    Both paths assign with :func:`ivf_assign` (one batch matmul per
+    Arrow batch). ``arrow=True`` then runs the fused plan: ONE shuffle
+    (groupBy cell) into a per-cluster kernel that emits the surviving
+    rows directly — no dup-id distinct, no LeftAnti join, and the
+    assignment stage runs once instead of the default plan's twice
+    (the anti-join recomputes its build side). Same decision rule; the
+    only non-contract is ulp-level cosine equality near ties (see
+    :func:`semantic_dup_ids_arrow`). PIPESCALE 64× (measured with an
+    interpreted assignment fold): 244.9 s (JVM) → fused Arrow well
+    under the pair-stage-only twin's 84.6 s, because the measured cost
+    was never the matmul — it was join-row materialization plus the
+    doubled assignment.
 
     ``max_cell`` (arrow path) bounds MEGACLUSTER skew: the fused kernel
     holds one cluster's matrix per task, so a cluster holding half the
@@ -255,18 +254,14 @@ def semantic_dedup(
         if centroids is not None
         else ivf_centroids(df, n_clusters, id_col, vec_col, refine_iters)
     )
+    assigned = ivf_assign(df, cents, vec_col=vec_col)
     if not arrow:
-        assigned = ivf_assign(df, cents, vec_col=vec_col)
         dups = semantic_dup_ids(assigned, threshold, id_col, vec_col)
         return assigned.join(dups, id_col, "left_anti")
 
     import numpy as np
     import pandas as pd
 
-    from .similarity import ivf_assign_arrow
-
-    ensure_fast_blas(df.sparkSession)
-    assigned = ivf_assign_arrow(df, cents, vec_col=vec_col)
     out_schema = assigned.schema
     out_cols = [f.name for f in out_schema.fields]
 

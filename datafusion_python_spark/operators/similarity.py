@@ -2,36 +2,34 @@
 
 Brute-force cosine top-k is the exact baseline (a single scan +
 TakeOrderedAndProject — no shuffle of the corpus); the LSH-bucketed
-variants are the scale path: random-hyperplane signatures bucket the
-corpus so a query or self-join only touches its bucket. Dot products
-run through zip_with/aggregate — JVM expressions, no Python.
+and IVF variants are the scale path: random-hyperplane signatures or
+coarse cells bucket the corpus so a query or self-join only touches
+its bucket.
 
-Two kernels per hot operation. The default is the declarative JVM path
-(keeps the whole plan inside Catalyst, zero Python workers — the gate
-queries certify this one). The ``*_arrow`` twins swap ONLY the
-per-partition kernel for a numpy batch matmul over Arrow buffers via
-``mapInArrow``: Catalyst evaluates ``zip_with``/``aggregate`` lambdas
-per element (higher-order functions are interpreted, not codegen'd),
-so for wide embeddings the vectorized BLAS kernel wins by a widening
-margin — measured on this container at 64 dims, brute-force top-k over
-100 k vectors: JVM 1.45 s vs Arrow 0.33 s (4.4×); at 2 k vectors the
-Arrow path already ties. The reduce shape is identical in both: each
-batch emits only bounded rows (top-k / a cell id), so shuffle volume —
-the thing that matters at 100 TB — does not change with the kernel.
+The hot per-row math — cosine top-k, IVF cell assignment (and so
+``ivf_ann`` and SemDeDup's assignment), random projection — runs as a
+numpy batch matmul over Arrow buffers via ``mapInArrow``. Catalyst
+evaluates ``zip_with``/``aggregate`` lambdas per element (higher-order
+functions are interpreted, not codegen'd), so the vectorized kernel
+wins by a margin that widens with corpus size and dimensionality:
+brute-force top-k over 100 k × 64-dim vectors measured 4.4× faster
+than a ``zip_with``/``aggregate`` fold (a tie at 2 k vectors). Each batch emits
+only bounded rows (top-k / a cell id), so shuffle volume — the thing
+that matters at 100 TB — is the same as a declarative plan's. The LSH
+signature and the pairwise join forms stay JVM expressions.
 
-Kernel/JVM parity contract (each clause is tested):
+Kernel contract (each clause is tested):
 - Rounding uses ``_spark_round`` — HALF_UP on the shortest decimal
   repr, exactly Spark's ``F.round`` (java BigDecimal.valueOf) — NOT
   ``np.round``, whose half-even ties on the binary double diverge.
-- Degenerate vectors fail loudly in both paths: the JVM cosine is a
-  ``Divide`` whose zero divisor raises DIVIDE_BY_ZERO under Spark 4's
-  default ANSI mode, so the kernels raise ``ValueError`` on zero-norm
-  embeddings (and on null embeddings, which the flatten-reshape could
-  otherwise silently misalign) instead of inventing a value. Null IDS
-  are tolerated wherever the JVM path tolerates them (``cosine_topk``:
-  the id only joins the tie-break, NULLS FIRST asc) and raise only
-  where the JVM path would also fail (pair min/max in the near-dup
-  kernels).
+- Degenerate vectors fail loudly: a zero-norm embedding, centroid or
+  query raises ``ValueError`` ("zero-norm"), and a null embedding
+  raises too (the flatten-reshape would otherwise silently misalign
+  rows) — a JVM cosine expression would raise ANSI DIVIDE_BY_ZERO on
+  the first and yield a null cosine on the second. Null IDS are
+  tolerated wherever a sort tolerates them (``cosine_topk``: the id
+  only joins the tie-break, NULLS FIRST asc) and raise only where a
+  pair min/max needs them (the near-dup kernels).
 - NaN follows Spark's total order (NaN above every double): NaN
   cosines survive ``>= threshold`` filters and win top-k selection.
   One documented edge: local selection keys NaN as +inf, so a genuine
@@ -47,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ._util import ensure_fast_blas, shuffle_partitions, spread_small_input
+from ._util import shuffle_partitions, spread_small_input
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -90,30 +88,6 @@ def _signature(emb: Column, planes: list[list[float]]) -> Column:
     return out
 
 
-def cosine_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k nearest neighbors to ``query_vec`` by cosine.
-
-    One pass over the corpus; sort+limit fuses to TakeOrderedAndProject,
-    so per-partition heaps keep only k rows — works unchanged at 100 TB.
-    """
-    q = F.array(*[F.lit(float(v)) for v in query_vec])
-    emb = F.col(vec_col).cast("array<double>")
-    return (
-        df.select(
-            F.col(id_col),
-            F.round(cosine_similarity_col(emb, q), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), id_col)
-        .limit(k)
-    )
-
-
 def _spark_round(a, decimals: int = 6):
     """Vectorized round matching Spark's ``F.round`` on doubles bit-for-bit.
 
@@ -125,7 +99,7 @@ def _spark_round(a, decimals: int = 6):
     through decimal. The near-tie band is max(1e-6, 4 ulp of the
     scaled value): the fixed floor covers cosine-range magnitudes, the
     ulp term keeps the net wide enough for unbounded inputs (e.g.
-    ``random_projection_arrow`` components), where ``a * 1e6`` alone
+    ``random_projection`` components), where ``a * 1e6`` alone
     can carry more than 1e-6 of float error. Widening only routes more
     elements through the exact path. NaN/inf pass through untouched.
     """
@@ -157,8 +131,7 @@ def _batch_matrix(batch, vec_col: str):
 
     Nulls are rejected up front: ``flatten()`` silently drops a null
     row's slots, so a null embedding would either break the reshape or
-    misalign every subsequent row's vector — and the JVM twin raises on
-    the resulting divide anyway (ANSI). Ragged rows get the same loud
+    misalign every subsequent row's vector. Ragged rows get the same loud
     treatment: per-row lengths are validated from the ListArray offsets
     (an aggregate ``len % n`` check would let rows of e.g. 3 and 5
     slots at dim 4 reshape silently and misalign every vector).
@@ -186,36 +159,33 @@ def _batch_matrix(batch, vec_col: str):
     return flat.reshape(n, -1)
 
 
-def cosine_topk_arrow(
+def cosine_topk(
     df: DataFrame,
     query_vec: list[float],
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """``cosine_topk`` with the numpy/Arrow kernel (see module docstring).
+    """Exact top-k nearest neighbors to ``query_vec`` by cosine.
 
-    Each Arrow batch computes all its cosines in one matmul and emits
-    only its local top-k (selected on the ROUNDED score — Spark's
-    HALF_UP rounding via ``_spark_round`` — with the same id tie-break
-    as the JVM path through pyarrow ``sort_indices``, so results are
-    bit-identical for any orderable id type); the global TakeOrdered
-    merge therefore sees #batches × k rows no matter how large the
-    corpus is — the same scale shape as ``cosine_topk``, ~4× the
-    per-partition throughput at 64 dims and widening with
-    dimensionality. Zero-norm embeddings (or query) raise, mirroring
-    the JVM path's ANSI DIVIDE_BY_ZERO; null ids are tolerated exactly
-    like the JVM path (no divide involves the id — it only joins the
-    tie-break, where Spark's ascending order puts NULL first, matched
-    here via ``null_placement="at_start"``).
+    One pass over the corpus: each Arrow batch computes all its cosines
+    in one matmul and emits only its local top-k (selected on the
+    ROUNDED score — Spark's HALF_UP 6-dp rounding via ``_spark_round``
+    — with the id tie-break through pyarrow ``sort_indices``, so any
+    orderable id type works); the global sort+limit fuses to
+    TakeOrderedAndProject and sees #batches × k rows no matter how
+    large the corpus is — works unchanged at 100 TB. Zero-norm
+    embeddings (or query) raise ``ValueError`` and null embeddings
+    raise (see the module docstring); null ids are tolerated — the id
+    only joins the tie-break, where Spark's ascending order puts NULL
+    first, matched here via ``null_placement="at_start"``.
     """
     import numpy as np
     import pyarrow as pa
 
-    ensure_fast_blas(df.sparkSession)
     qv = [float(v) for v in query_vec]
     if sum(v * v for v in qv) == 0.0:
-        raise ValueError("cosine_topk_arrow: query vector has zero norm")
+        raise ValueError("cosine_topk: query vector has zero norm")
     id_field = df.schema[id_col]
     out_schema = f"{id_col} {id_field.dataType.simpleString()}, cosine double"
 
@@ -231,10 +201,7 @@ def cosine_topk_arrow(
             m = _batch_matrix(b, vec_col)
             norms = np.sqrt((m * m).sum(axis=1)) * qn
             if (norms == 0).any():
-                raise ValueError(
-                    "cosine_topk_arrow: zero-norm embedding (the JVM path "
-                    "raises DIVIDE_BY_ZERO here under ANSI mode)"
-                )
+                raise ValueError("cosine_topk: zero-norm embedding")
             cos = _spark_round((m @ q) / norms, 6)
             # Spark's total order puts NaN above every double: key it as
             # +inf so NaN rows win local selection like they win the
@@ -306,7 +273,8 @@ def lsh_bucket_ann(
 ) -> DataFrame:
     """Approximate top-k: probe the query's LSH bucket(s), exact rerank.
 
-    Candidate set shrinks ~2^n_planes/n_probes-fold vs brute force.
+    Candidate set shrinks ~2^n_planes/n_probes-fold vs brute force; the
+    rerank is :func:`cosine_topk` over the probed rows.
     ``n_probes > 1`` raises recall by also scanning the buckets whose
     separating hyperplanes the query sits closest to (multi-probe LSH) —
     the probe set is a literal IN filter on the bucket column, so with a
@@ -314,20 +282,14 @@ def lsh_bucket_ann(
     """
     planes = _planes(len(query_vec), n_planes)
     probes = _probe_signatures(query_vec, planes, max(1, n_probes))
-    q = F.array(*[F.lit(float(v)) for v in query_vec])
     emb = F.col(vec_col).cast("array<double>")
     bucket_filter = (
         F.col("bucket") == F.lit(probes[0])
         if len(probes) == 1
         else F.col("bucket").isin(probes)
     )
-    return (
-        df.withColumn("bucket", _signature(emb, planes))
-        .filter(bucket_filter)
-        .select(F.col(id_col), F.round(cosine_similarity_col(emb, q), 6).alias("cosine"))
-        .orderBy(F.desc("cosine"), id_col)
-        .limit(k)
-    )
+    probed = df.withColumn("bucket", _signature(emb, planes)).filter(bucket_filter)
+    return cosine_topk(probed, query_vec, k=k, id_col=id_col, vec_col=vec_col)
 
 
 def ivf_assign(
@@ -338,69 +300,27 @@ def ivf_assign(
 ) -> DataFrame:
     """Append the IVF coarse-cell id: argmax cosine over the centroid list.
 
-    Centroids are compiled into the expression (array_sort over an array
-    of (−cos, cell) structs — pure codegen, no UDF, no broadcast state),
-    so assignment is a map-only pass: at ingest scale the cell id becomes
-    the partition/bucket key exactly like the LSH signature.
-
-    The row norm is staged as its own column (referenced n_list times,
-    so CollapseProject keeps it a separate, once-per-row projection) and
-    centroid norms fold in Python with the same left-to-right order as
-    ``F.aggregate`` — bit-identical to the previous per-entry
-    ``dot/(norm_e*norm_c)`` expression at 1 fold per centroid instead
-    of 2.
-    """
-    emb = F.col(vec_col).cast("array<double>")
-    staged = df.withColumn("__ivf_norm", _norm(emb))
-    n = F.col("__ivf_norm")
-    entries = []
-    for ci, c in enumerate(centroids):
-        acc = 0.0
-        for v in c:
-            acc += float(v) * float(v)
-        cn = acc ** 0.5
-        arr = F.array(*[F.lit(float(v)) for v in c])
-        entries.append(
-            F.struct((-(_dot(emb, arr) / (n * F.lit(cn)))).alias("d"), F.lit(ci).alias("c"))
-        )
-    best = F.array_sort(F.array(*entries))[0]["c"]
-    return staged.withColumn(cell_col, best).drop("__ivf_norm")
-
-
-def ivf_assign_arrow(
-    df: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-    cell_col: str = "ivf_cell",
-) -> DataFrame:
-    """``ivf_assign`` with the numpy/Arrow kernel (see module docstring).
-
-    One (n × dim) @ (dim × n_list) matmul per Arrow batch instead of
-    n_list interpreted expression trees per row. Exact-tie argmax
-    resolves to the lowest cell id like the JVM ``array_sort``
-    tie-break, and a centroid whose cosine is NaN sorts last in both
-    paths (Spark orders NaN above every double, so its negated ``d``
-    is the worst key). Zero-norm members or centroids raise, mirroring
-    the JVM path's ANSI DIVIDE_BY_ZERO. NOT a contract: bit-equal
-    cosines between the two paths — the JVM folds the dot product
-    sequentially while the kernel uses a pairwise/SIMD matmul, so a
-    near-tie inside ~1 ulp can assign to a different (equally near)
-    cell. IVF is a coarse quantizer; probe sets absorb that.
-    Still map-only — no shuffle, no state, all input columns carried
-    through — so it composes with bucketed ingest layouts unchanged.
+    One (n × dim) @ (dim × n_list) matmul per Arrow batch (centroids are
+    captured in the kernel closure — no broadcast state), so assignment
+    is a map-only pass: at ingest scale the cell id becomes the
+    partition/bucket key exactly like the LSH signature. Exact-tie
+    argmax resolves to the lowest cell id, and a centroid whose cosine
+    is NaN ranks last. Zero-norm members or centroids raise
+    ``ValueError`` and null embeddings raise (see the module
+    docstring). Not a contract: bit-equal cosines with a sequential
+    dot-product fold — the matmul sums pairwise/SIMD, so a near-tie
+    inside ~1 ulp may pick the other (equally near) cell. IVF is a
+    coarse quantizer; probe sets absorb that. All input columns are
+    carried through, so it composes with bucketed ingest layouts.
     """
     import numpy as np
     import pyarrow as pa
 
     from pyspark.sql.types import IntegerType, StructField, StructType
 
-    ensure_fast_blas(df.sparkSession)
     cents = [[float(v) for v in c] for c in centroids]
     if any(sum(v * v for v in c) == 0.0 for c in cents):
-        raise ValueError(
-            "ivf_assign_arrow: zero-norm centroid (the JVM path raises "
-            "DIVIDE_BY_ZERO here under ANSI mode)"
-        )
+        raise ValueError("ivf_assign: zero-norm centroid")
     # fresh StructType: StructType.add mutates (and df.schema is cached)
     out_schema = StructType(
         list(df.schema.fields) + [StructField(cell_col, IntegerType())]
@@ -416,13 +336,10 @@ def ivf_assign_arrow(
             m = _batch_matrix(b, vec_col)
             norms = np.sqrt((m * m).sum(axis=1))
             if (norms == 0).any():
-                raise ValueError(
-                    "ivf_assign_arrow: zero-norm embedding (the JVM path "
-                    "raises DIVIDE_BY_ZERO here under ANSI mode)"
-                )
+                raise ValueError("ivf_assign: zero-norm embedding")
             cos = (m / norms[:, None]) @ cu.T
-            # NaN cosine → that centroid sorts last (JVM: d=NaN is the
-            # largest sort key); an all-NaN row ties → lowest cell id,
+            # NaN cosine → that centroid ranks last (Spark: NaN is the
+            # largest double); an all-NaN row ties → lowest cell id,
             # which argmax over all -inf also yields.
             cos[np.isnan(cos)] = -np.inf
             best = pa.array(np.argmax(cos, axis=1).astype(np.int32))
@@ -444,11 +361,11 @@ def ivf_centroids(
     """Deterministic coarse-quantizer seeds: the first n_list vectors by
     id, optionally refined with ``refine_iters`` k-means passes.
 
-    Each refinement pass is one distributed job — assign (codegen argmax,
-    map-only) then posexplode+avg (one shuffle on (cell, dim)) — and
-    pulls only n_list centroid rows to the driver, the same bounded
-    footprint as the seed fetch. Empty cells keep their previous
-    centroid.
+    Each refinement pass is one distributed job — assign
+    (:func:`ivf_assign`, map-only) then posexplode+avg (one shuffle on
+    (cell, dim)) — and pulls only n_list centroid rows to the driver,
+    the same bounded footprint as the seed fetch. Empty cells keep
+    their previous centroid.
     """
     rows = df.select(F.col(vec_col).cast("array<double>").alias("v")).orderBy(
         id_col
@@ -481,7 +398,6 @@ def ivf_ann(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
-    arrow: bool = False,
 ) -> DataFrame:
     """IVF approximate top-k: assign the corpus to coarse cells, scan only
     the ``n_probe`` cells nearest the query, exact cosine rerank inside.
@@ -489,16 +405,11 @@ def ivf_ann(
     The probe set is a literal IN filter on the cell column — with the
     corpus bucketed by cell (the ingest-time layout at 100 TB), a query
     touches n_probe/n_list of the data and the rerank fuses to
-    TakeOrderedAndProject per-partition heaps.
-
-    ``arrow=True`` swaps the assignment stage for ``ivf_assign_arrow``
-    (one batch matmul instead of n_list interpreted folds per row —
-    the dominant cost once n_list grows past a few dozen; PIPESCALE
-    64× with n_list=357 measured the JVM assignment at ~60 of 66 s)
-    and the rerank for the ``cosine_topk_arrow`` kernel. Probe-set
-    parity is not bit-contractual near assignment ties (see
-    ``ivf_assign_arrow``); at ingest scale the assignment runs once
-    and is bucketed anyway, so the flag matters for ad-hoc corpora.
+    TakeOrderedAndProject per-partition heaps. Assignment is
+    :func:`ivf_assign` and the rerank is :func:`cosine_topk` — one batch
+    matmul each instead of n_list interpreted folds per row. Probe-cell
+    membership is not bit-contractual near assignment ties (see
+    :func:`ivf_assign`).
     """
     cents = centroids if centroids is not None else ivf_centroids(df, n_list, id_col, vec_col)
 
@@ -514,20 +425,8 @@ def ivf_ann(
         if len(probe_cells) == 1
         else F.col("ivf_cell").isin(probe_cells)
     )
-    if arrow:
-        assigned = ivf_assign_arrow(df, cents, vec_col=vec_col)
-        return cosine_topk_arrow(
-            assigned.filter(cell_filter), query_vec, k=k, id_col=id_col, vec_col=vec_col
-        )
-    q = F.array(*[F.lit(float(v)) for v in query_vec])
-    emb = F.col(vec_col).cast("array<double>")
-    assigned = ivf_assign(df, cents, vec_col=vec_col)
-    return (
-        assigned.filter(cell_filter)
-        .select(F.col(id_col), F.round(cosine_similarity_col(emb, q), 6).alias("cosine"))
-        .orderBy(F.desc("cosine"), id_col)
-        .limit(k)
-    )
+    assigned = ivf_assign(df, cents, vec_col=vec_col).filter(cell_filter)
+    return cosine_topk(assigned, query_vec, k=k, id_col=id_col, vec_col=vec_col)
 
 
 def cosine_near_dup_pairs_arrow(
@@ -557,7 +456,6 @@ def cosine_near_dup_pairs_arrow(
     import numpy as np
     import pandas as pd
 
-    ensure_fast_blas(df.sparkSession)
     id_t = df.schema[id_col].dataType.simpleString()
     out_schema = f"id_a {id_t}, id_b {id_t}, cosine double"
     sig = lsh_signature(df, dim=dim, vec_col=vec_col, n_planes=n_planes)

@@ -17,32 +17,17 @@ still verified by ``tools/selfcheck.py`` (same DuckDB comparison).
 from __future__ import annotations
 
 from .suite_analytics import ANALYTICS_QUERIES
+from .suite_pipeline import PIPELINE_QUERIES
+from .suite_streaming import STREAMING_QUERIES
 from .suite_tpch import TPCH_QUERIES
+from .suite_udf import UDF_QUERIES
 
 _MERGED: dict[str, tuple] = {}
 _MERGED.update(TPCH_QUERIES)
 _MERGED.update(ANALYTICS_QUERIES)
-
-try:  # beyond-parity pipeline ops (dedup / similarity / text analysis)
-    from .suite_pipeline import PIPELINE_QUERIES
-
-    _MERGED.update(PIPELINE_QUERIES)
-except ImportError:  # module lands later in the build
-    pass
-
-try:  # UDF/UDAF gate queries
-    from .suite_udf import UDF_QUERIES
-
-    _MERGED.update(UDF_QUERIES)
-except ImportError:
-    pass
-
-try:  # Structured Streaming gates (memory-sink bounded replay)
-    from .suite_streaming import STREAMING_QUERIES
-
-    _MERGED.update(STREAMING_QUERIES)
-except ImportError:
-    pass
+_MERGED.update(PIPELINE_QUERIES)  # beyond-parity pipeline ops
+_MERGED.update(UDF_QUERIES)  # UDF/UDAF gate queries
+_MERGED.update(STREAMING_QUERIES)  # Structured Streaming (memory-sink replay)
 
 # Names to place at the front of the registry (driver windows the
 # first 50). Unlisted names follow in their module order;

@@ -221,10 +221,9 @@ def pipe_simhash(spark, sf_dir):
     from .operators.sampling import hash_sample
 
     # 50% deterministic hash-slice (same convention as pipe_jaccard_pairs
-    # / pipe_minhash_lsh): this is the interpreted-JVM parity twin of
-    # pipe_simhash_arrow — the slice halves the per-word bit-vote cost
-    # and quarters the pair join while the oracle replays the identical
-    # structure (round-8 verdict #5: this gate was ~38 s of the audit).
+    # / pipe_minhash_lsh): the slice quarters the pair join while the
+    # oracle replays the identical structure; pipe_simhash_arrow gates
+    # the unsliced corpus.
     docs = hash_sample(_t(spark, sf_dir, "documents"), "doc_id", 0.5)
     sig = simhash(docs, "text", hasher="md5")
     return simhash_near_dups(sig, "doc_id", max_hamming=8, bits=60).orderBy(
@@ -263,11 +262,8 @@ FROM pairs WHERE bit_count(xor(sa, sb)) <= 8
 ORDER BY id_a, id_b
 """
 
-# Unsliced oracle for the Arrow twin: pipe_simhash_arrow keeps the FULL
-# corpus (the numpy bit-vote kernel is ~20x faster than the interpreted
-# JVM path, so the audit-time slice is only needed on the JVM parity
-# twin above) — it must therefore pair with an oracle without the 50%
-# hash-slice predicate.
+# Unsliced oracle: pipe_simhash_arrow runs simhash over the FULL corpus,
+# so it pairs with an oracle without the 50% hash-slice predicate.
 PIPE_SIMHASH_FULL_SQL = PIPE_SIMHASH_SQL.replace(
     "\n  WHERE substr(md5(doc_id::VARCHAR), 1, 4) < '8000'", ""
 )
@@ -1602,37 +1598,19 @@ ORDER BY doc_id
 
 
 # --------------------------------------------------------------------------
-# Arrow-kernel twins on the driver record. Each *_arrow gate runs the
-# numpy/mapInArrow (or fused applyInPandas) kernel against the SAME
-# DuckDB oracle as its JVM-path sibling — the kernels claim decision
-# parity with the JVM paths (tests/test_similarity_arrow.py asserts it
-# pairwise), and these gates put that claim on the driver's
-# CORRECTNESS record instead of pytest-only.
+# Gates kept under their *_arrow names so the recorded correctness
+# history (CORRECTNESS_r*.json) stays continuous. pipe_topk_arrow and
+# pipe_ann_ivf_arrow are aliases of pipe_cosine_topk and pipe_ann_ivf
+# (see the registry); the remaining three run on the full corpus
+# (pipe_simhash_arrow) or exercise the fused applyInPandas kernels
+# that still have JVM-join siblings (pipe_semdedup_arrow,
+# pipe_neardup_arrow), each against the same DuckDB oracle as its
+# sibling.
 def pipe_simhash_arrow(spark, sf_dir):
-    from .operators.dedup import simhash_arrow
-
     docs = _t(spark, sf_dir, "documents")
-    sig = simhash_arrow(docs, "text", hasher="md5")
+    sig = simhash(docs, "text", hasher="md5")
     return simhash_near_dups(sig, "doc_id", max_hamming=8, bits=60).orderBy(
         "id_a", "id_b"
-    )
-
-
-def pipe_topk_arrow(spark, sf_dir):
-    from .operators.similarity import cosine_topk_arrow
-
-    emb = _t(spark, sf_dir, "embeddings")
-    q = _query_vec(spark, sf_dir)
-    return cosine_topk_arrow(emb.filter(F.col("vec_id") != 0), q, k=10)
-
-
-def pipe_ann_ivf_arrow(spark, sf_dir):
-    from .operators.similarity import ivf_ann
-
-    emb = _t(spark, sf_dir, "embeddings")
-    q = _query_vec(spark, sf_dir)
-    return ivf_ann(
-        emb.filter(F.col("vec_id") != 0), q, n_list=8, n_probe=2, k=10, arrow=True
     )
 
 
@@ -1994,8 +1972,8 @@ PIPELINE_QUERIES: dict[str, tuple] = {
     "pipe_minhash_cluster": (pipe_minhash_cluster, PIPE_MINHASH_CLUSTER_SQL),
     "pipe_semantic_dedup": (pipe_semantic_dedup, PIPE_SEMANTIC_DEDUP_SQL),
     "pipe_simhash_arrow": (pipe_simhash_arrow, PIPE_SIMHASH_FULL_SQL),
-    "pipe_topk_arrow": (pipe_topk_arrow, PIPE_COSINE_TOPK_SQL),
-    "pipe_ann_ivf_arrow": (pipe_ann_ivf_arrow, PIPE_ANN_IVF_SQL),
+    "pipe_topk_arrow": (pipe_cosine_topk, PIPE_COSINE_TOPK_SQL),
+    "pipe_ann_ivf_arrow": (pipe_ann_ivf, PIPE_ANN_IVF_SQL),
     "pipe_semdedup_arrow": (pipe_semdedup_arrow, PIPE_SEMANTIC_DEDUP_SQL),
     "pipe_neardup_arrow": (pipe_neardup_arrow, PIPE_NEARDUP_BUCKETED_SQL),
 }

@@ -42,8 +42,8 @@ def test_embeddings_planted_truth(spark):
     res = xl.run_emb_size(spark, n)
     assert res["semantic_dedup_arrow"]["ok"], res["semantic_dedup_arrow"]
     assert res["semantic_dedup_arrow"]["out_rows"] == 3 * n // 4
-    assert res["cosine_topk_arrow"]["ok"], res["cosine_topk_arrow"]
-    assert res["ivf_ann_arrow"]["ok"], res["ivf_ann_arrow"]
+    assert res["cosine_topk"]["ok"], res["cosine_topk"]
+    assert res["ivf_ann"]["ok"], res["ivf_ann"]
 
 
 def test_doc_generator_shape(spark):

@@ -1,19 +1,23 @@
-"""Arrow-kernel twins of the similarity operators must be bit-identical
-to the declarative JVM paths — same rows, same rounding, same
-tie-breaks — since they swap only the per-partition kernel, never the
-reduce shape."""
+"""The numpy/Arrow kernels behind the similarity and dedup operators,
+checked against independent references: exact Python rankings, numpy
+brute force, and the interpreted Spark folds the kernels replaced.
+The near-dup and SemDeDup kernels, which still have JVM-join twins,
+are checked against those twins."""
 
 from __future__ import annotations
 
+import math
+import os
+from decimal import ROUND_HALF_UP, Decimal
+
+import numpy as np
 from pyspark.sql import functions as F
 
 from datafusion_python_spark.operators.similarity import (
     cosine_near_dup_pairs,
     cosine_near_dup_pairs_arrow,
     cosine_topk,
-    cosine_topk_arrow,
     ivf_assign,
-    ivf_assign_arrow,
     ivf_centroids,
 )
 from datafusion_python_spark.tables import load_table
@@ -25,29 +29,83 @@ def _emb(spark, sf_dir):
     return load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
 
-def test_cosine_topk_arrow_matches_jvm(spark, sf_dir):
+def _cosine(a, b):
+    # sequential left-to-right folds, like an interpreted aggregate()
+    dot = na = nb = 0.0
+    for x, y in zip(a, b):
+        dot += x * y
+        na += x * x
+        nb += y * y
+    return dot / (math.sqrt(na) * math.sqrt(nb))
+
+
+def _round6(x: float) -> float:
+    # Spark's F.round: HALF_UP on the shortest decimal repr
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP))
+
+
+def _exact_topk(rows, query, k):
+    scored = [(i, _round6(_cosine(v, query))) for i, v in rows]
+    return sorted(scored, key=lambda t: (-t[1], t[0]))[:k]
+
+
+def test_cosine_topk_matches_exact_ranking(spark, sf_dir):
     emb = _emb(spark, sf_dir)
-    jvm = [(r.vec_id, r.cosine) for r in cosine_topk(emb, QUERY, k=15).collect()]
-    arrow = [(r.vec_id, r.cosine) for r in cosine_topk_arrow(emb, QUERY, k=15).collect()]
-    assert arrow == jvm
-    assert len(arrow) == 15
+    rows = [(r.vec_id, list(r.embedding)) for r in emb.collect()]
+    got = [(r.vec_id, r.cosine) for r in cosine_topk(emb, QUERY, k=15).collect()]
+    assert got == _exact_topk(rows, QUERY, 15)
+    assert len(got) == 15
 
 
 def test_cosine_topk_arrow_many_partitions(spark, sf_dir):
     # local top-k per batch + global TakeOrdered must agree with the
     # single-partition answer regardless of the split
     emb = _emb(spark, sf_dir)
-    one = [(r.vec_id, r.cosine) for r in cosine_topk_arrow(emb.coalesce(1), QUERY, k=5).collect()]
-    many = [(r.vec_id, r.cosine) for r in cosine_topk_arrow(emb.repartition(16), QUERY, k=5).collect()]
+    one = [(r.vec_id, r.cosine) for r in cosine_topk(emb.coalesce(1), QUERY, k=5).collect()]
+    many = [(r.vec_id, r.cosine) for r in cosine_topk(emb.repartition(16), QUERY, k=5).collect()]
     assert one == many
 
 
-def test_ivf_assign_arrow_matches_jvm(spark, sf_dir):
+def _bruteforce_cells(rows, cents):
+    m = np.array([v for _, v in rows], dtype=np.float64)
+    c = np.array(cents, dtype=np.float64)
+    cos = (m @ c.T) / np.outer(np.linalg.norm(m, axis=1), np.linalg.norm(c, axis=1))
+    # np.argmax returns the first maximum: the lowest cell wins ties
+    return {i: int(cell) for (i, _), cell in zip(rows, np.argmax(cos, axis=1))}
+
+
+def test_ivf_assign_matches_bruteforce_argmax(spark, sf_dir):
     emb = _emb(spark, sf_dir)
     cents = ivf_centroids(emb, n_list=8)
-    jvm = {r.vec_id: r.ivf_cell for r in ivf_assign(emb, cents).collect()}
-    arrow = {r.vec_id: r.ivf_cell for r in ivf_assign_arrow(emb, cents).collect()}
-    assert arrow == jvm
+    rows = [(r.vec_id, list(r.embedding)) for r in emb.collect()]
+    got = {r.vec_id: r.ivf_cell for r in ivf_assign(emb, cents).collect()}
+    assert got == _bruteforce_cells(rows, cents)
+    assert len(set(got.values())) > 1
+    # exact ties (equidistant vector, duplicated centroid) -> lowest cell
+    ties = spark.createDataFrame(
+        [(1, [1.0, 1.0]), (2, [0.0, 3.0])], "vec_id int, embedding array<double>"
+    )
+    cells = {
+        r.vec_id: r.ivf_cell
+        for r in ivf_assign(ties, [[1.0, 0.0], [0.0, 1.0], [0.0, 2.0]]).collect()
+    }
+    assert cells == {1: 0, 2: 1}
+
+
+def test_ivf_ann_matches_exact_probe_ranking(spark, sf_dir):
+    from datafusion_python_spark.operators.similarity import ivf_ann
+
+    emb = _emb(spark, sf_dir)
+    cents = ivf_centroids(emb, n_list=8)
+    rows = [(r.vec_id, list(r.embedding)) for r in emb.collect()]
+    cells = _bruteforce_cells(rows, cents)
+    probe = sorted(range(8), key=lambda c: -_cosine(QUERY, cents[c]))[:2]
+    want = _exact_topk([(i, v) for i, v in rows if cells[i] in probe], QUERY, 10)
+    got = [
+        (r.vec_id, r.cosine)
+        for r in ivf_ann(emb, QUERY, n_list=8, n_probe=2, k=10).collect()
+    ]
+    assert got == want and len(got) == 10
 
 
 def test_near_dup_pairs_arrow_matches_jvm(spark, sf_dir):
@@ -68,21 +126,38 @@ def test_near_dup_pairs_arrow_matches_jvm(spark, sf_dir):
 
 
 def test_random_projection_arrow_matches_jvm(spark, sf_dir):
+    # reference: the interpreted zip_with/aggregate fold the kernel
+    # replaced — same sign matrix, scale and F.round
     from datafusion_python_spark.operators.projection import (
+        projection_signs,
         random_projection,
-        random_projection_arrow,
     )
 
     emb = _emb(spark, sf_dir)
-    jvm = {r.vec_id: r.proj for r in random_projection(emb, out_dim=8).collect()}
-    arrow = {r.vec_id: r.proj for r in random_projection_arrow(emb, out_dim=8).collect()}
+    signs = projection_signs(64, 8, seed=0)
+    scale = 1.0 / math.sqrt(64)
+    vec = F.col("embedding").cast("array<double>")
+    comps = [
+        F.round(
+            F.aggregate(
+                F.zip_with(vec, F.array(*[F.lit(x) for x in row]), lambda x, s: x * s),
+                F.lit(0.0),
+                lambda acc, v: acc + v,
+            )
+            * F.lit(scale),
+            6,
+        )
+        for row in signs
+    ]
+    jvm = {r.vec_id: r.proj for r in emb.select("vec_id", F.array(*comps).alias("proj")).collect()}
+    arrow = {r.vec_id: r.proj for r in random_projection(emb, out_dim=8).collect()}
     assert arrow == jvm
     assert all(len(v) == 8 for v in arrow.values())
 
 
 def test_ivf_assign_arrow_keeps_columns(spark, sf_dir):
     emb = _emb(spark, sf_dir).withColumn("tag", F.lit("x"))
-    out = ivf_assign_arrow(emb, [[1.0] * 64, [-1.0] * 64])
+    out = ivf_assign(emb, [[1.0] * 64, [-1.0] * 64])
     assert out.columns == ["vec_id", "embedding", "tag", "ivf_cell"]
     n_cells = out.select("ivf_cell").distinct().count()
     assert 1 <= n_cells <= 2
@@ -151,30 +226,28 @@ def test_topk_arrow_string_ids(spark):
     # np.lexsort chokes on object arrays; the pyarrow tie-break must not.
     rows = [(f"doc{i:02d}", [1.0, float(i % 3)]) for i in range(9)]
     df = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
-    jvm = [(r.vec_id, r.cosine) for r in cosine_topk(df, [1.0, 1.0], k=4).collect()]
-    arrow = [(r.vec_id, r.cosine) for r in cosine_topk_arrow(df, [1.0, 1.0], k=4).collect()]
-    assert arrow == jvm and len(arrow) == 4
+    got = [(r.vec_id, r.cosine) for r in cosine_topk(df, [1.0, 1.0], k=4).collect()]
+    assert got == _exact_topk(rows, [1.0, 1.0], 4) and len(got) == 4
 
 
 def test_degenerate_vectors_raise_in_both_paths(spark):
-    # ANSI Spark raises DIVIDE_BY_ZERO on the JVM cosine's zero divisor;
-    # the Arrow kernels raise ValueError instead of inventing a value.
+    # ANSI Spark raises DIVIDE_BY_ZERO on a JVM cosine's zero divisor
+    # (the near-dup join path); the Arrow kernels raise ValueError
+    # instead of inventing a value.
     import pytest
 
     df = spark.createDataFrame(
         [(1, [0.0, 0.0]), (2, [1.0, 0.0])], "vec_id int, embedding array<double>"
     )
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        cosine_near_dup_pairs(df, dim=2, threshold=0.5, exact=True).collect()
+    with pytest.raises(Exception, match="zero-norm"):
         cosine_topk(df, [1.0, 0.0], k=2).collect()
-    with pytest.raises(Exception, match="zero-norm"):
-        cosine_topk_arrow(df, [1.0, 0.0], k=2).collect()
     with pytest.raises(ValueError, match="zero norm"):
-        cosine_topk_arrow(df, [0.0, 0.0], k=2)
+        cosine_topk(df, [0.0, 0.0], k=2)
     with pytest.raises(ValueError, match="zero-norm centroid"):
-        ivf_assign_arrow(df, [[0.0, 0.0]])
+        ivf_assign(df, [[0.0, 0.0]])
     with pytest.raises(Exception, match="zero-norm"):
-        ivf_assign_arrow(df.filter("vec_id = 1"), [[1.0, 0.0]]).collect()
-    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
         ivf_assign(df.filter("vec_id = 1"), [[1.0, 0.0]]).collect()
 
 
@@ -185,23 +258,27 @@ def test_null_embedding_raises_not_misaligns(spark):
         [(1, [1.0, 0.0]), (2, None), (3, [0.5, 0.5])],
         "vec_id int, embedding array<double>",
     )
-    with pytest.raises(Exception, match="null values in embedding"):
-        cosine_topk_arrow(df, [1.0, 0.0], k=3).collect()
+    from datafusion_python_spark.operators.projection import random_projection
+
+    for out in (
+        cosine_topk(df, [1.0, 0.0], k=3),
+        ivf_assign(df, [[1.0, 0.0]]),
+        random_projection(df, out_dim=2),
+    ):
+        with pytest.raises(Exception, match="null values in embedding"):
+            out.collect()
 
 
 def test_nan_vector_parity_topk_and_pairs(spark):
     # Spark's total order puts NaN above every double: NaN >= threshold
-    # holds and NaN wins desc sorts — both kernels must agree.
-    import math
-
+    # holds and NaN wins desc sorts — the kernels must agree.
     nan = float("nan")
     rows = [(1, [1.0, 0.0]), (2, [nan, 1.0]), (3, [0.6, 0.8]), (4, [0.0, 1.0])]
     df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
 
-    jvm = [(r.vec_id, r.cosine) for r in cosine_topk(df, [1.0, 0.0], k=3).collect()]
-    arrow = [(r.vec_id, r.cosine) for r in cosine_topk_arrow(df, [1.0, 0.0], k=3).collect()]
-    assert [i for i, _ in arrow] == [i for i, _ in jvm] == [2, 1, 3]
-    assert math.isnan(arrow[0][1]) and math.isnan(jvm[0][1])
+    top = [(r.vec_id, r.cosine) for r in cosine_topk(df, [1.0, 0.0], k=3).collect()]
+    assert [i for i, _ in top] == [2, 1, 3]
+    assert math.isnan(top[0][1])
 
     jvm_p = sorted(
         (r.id_a, r.id_b) for r in cosine_near_dup_pairs(df, dim=2, threshold=0.9).collect()
@@ -216,12 +293,20 @@ def test_nan_vector_parity_topk_and_pairs(spark):
 
 
 def test_topk_arrow_null_ids_match_jvm(spark):
-    # Null ids don't feed any divide — the JVM path lets them ride the
-    # tie-break (asc = NULLS FIRST); the kernel must select identically.
+    # Null ids don't feed any divide — they ride the tie-break, where
+    # Spark's asc sort puts NULL first; the kernel's local selection
+    # must agree with a JVM sort over the same cosines.
     rows = [(None, [1.0, 0.0]), (2, [1.0, 0.0]), (3, [0.6, 0.8]), (4, [0.0, 1.0])]
     df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    jvm = [(r.vec_id, r.cosine) for r in cosine_topk(df, [1.0, 0.0], k=3).collect()]
-    arrow = [(r.vec_id, r.cosine) for r in cosine_topk_arrow(df, [1.0, 0.0], k=3).collect()]
+    scored = spark.createDataFrame(
+        [(i, _round6(_cosine(v, [1.0, 0.0]))) for i, v in rows],
+        "vec_id int, cosine double",
+    )
+    jvm = [
+        (r.vec_id, r.cosine)
+        for r in scored.orderBy(F.desc("cosine"), "vec_id").limit(3).collect()
+    ]
+    arrow = [(r.vec_id, r.cosine) for r in cosine_topk(df, [1.0, 0.0], k=3).collect()]
     assert arrow == jvm
     assert jvm[0][0] is None  # ties at cosine 1.0 → null id first
 
@@ -343,9 +428,7 @@ def test_semantic_dedup_megacluster_cap(spark):
     assert 0 < len(capped) < 800  # some dups dropped, some survivors
     # bounded per-task groups: replay the chunk-pair construction and
     # check no (cell, lo, hi) group exceeds 2*max_cell rows
-    from datafusion_python_spark.operators.similarity import ivf_assign_arrow
-
-    assigned = ivf_assign_arrow(df, cents)
+    assigned = ivf_assign(df, cents)
     sizes = assigned.groupBy("ivf_cell").agg(F.count("*").alias("_cell_n"))
     tagged = assigned.join(F.broadcast(sizes), "ivf_cell").filter("_cell_n > 100")
     n_chunks = F.ceil(F.col("_cell_n") / F.lit(100)).cast("int")
@@ -519,18 +602,6 @@ def test_semdedup_salted_applyinpandas_single_exchange(spark):
     assert count_executed_shuffles(out) == 1, explain_str(out)
 
 
-def test_ivf_ann_arrow_matches_jvm(spark, sf_dir):
-    from datafusion_python_spark.operators.similarity import ivf_ann
-
-    emb = _emb(spark, sf_dir)
-    jvm = [(r.vec_id, r.cosine) for r in ivf_ann(emb, QUERY, n_list=8, n_probe=2, k=10).collect()]
-    arrow = [
-        (r.vec_id, r.cosine)
-        for r in ivf_ann(emb, QUERY, n_list=8, n_probe=2, k=10, arrow=True).collect()
-    ]
-    assert arrow == jvm and len(arrow) == 10
-
-
 def test_semantic_dedup_arrow_degenerate_raises(spark):
     import pytest
 
@@ -546,40 +617,85 @@ def test_semantic_dedup_arrow_degenerate_raises(spark):
         ).collect()
 
 
-def test_simhash_arrow_matches_jvm(spark, sf_dir):
-    # signatures must be identical by construction: the word hashes are
-    # the same JVM expressions; only the bit-vote fold moves to numpy.
-    from datafusion_python_spark.operators.dedup import simhash, simhash_arrow
-    from datafusion_python_spark.tables import load_table
+def _sf0_01_docs(spark, sf_dir):
+    # the sf0.01 corpus sits next to the session fixture's data
+    return load_table(
+        spark, os.path.join(os.path.dirname(sf_dir), "sf0.01"), "documents"
+    ).select("doc_id", "text")
 
-    docs = load_table(spark, sf_dir, "documents")
-    for hasher in ("xxhash64", "md5"):
-        jvm = {r.doc_id: r.simhash for r in simhash(docs, "text", hasher=hasher).select("doc_id", "simhash").collect()}
-        arrow = {r.doc_id: r.simhash for r in simhash_arrow(docs, "text", hasher=hasher).select("doc_id", "simhash").collect()}
-        assert arrow == jvm and len(jvm) > 0
-    # empty and null text produce signature 0 in both paths
-    edf = spark.createDataFrame(
-        [(1, "hello world"), (2, ""), (3, None)], "doc_id int, text string"
+
+EDGE_DOCS = [(1, "hello world foo bar"), (2, "x"), (3, ""), (4, None)]
+
+
+def _reference_simhash(df, hasher):
+    # the interpreted 64-fold aggregate() vote the kernel replaced, over
+    # the same staged word hashes
+    from datafusion_python_spark.operators.dedup import _simhash_word_hashes
+
+    bits = 64 if hasher == "xxhash64" else 60
+    sums = F.transform(
+        F.sequence(F.lit(0), F.lit(bits - 1)),
+        lambda b: F.aggregate(
+            F.col("_sh_hashes"),
+            F.lit(0),
+            lambda acc, h: acc + F.when(F.getbit(h, b) == 1, 1).otherwise(-1),
+        ),
     )
-    jvm = {r.doc_id: r.simhash for r in simhash(edf, "text").collect()}
-    arrow = {r.doc_id: r.simhash for r in simhash_arrow(edf, "text").collect()}
-    assert arrow == jvm and jvm[2] == 0 and jvm[3] == 0
+    sig = F.lit(0).cast("long")
+    for i in range(bits):
+        bitval = (1 << i) if i < 63 else -(1 << 63)
+        sig = sig.bitwiseOR(
+            F.when(F.col("_sh_sums")[i] > 0, F.lit(bitval).cast("long")).otherwise(
+                F.lit(0).cast("long")
+            )
+        )
+    staged = _simhash_word_hashes(df, "text", hasher).withColumn("_sh_sums", sums)
+    return {r.doc_id: r.simhash for r in staged.select("doc_id", sig.alias("simhash")).collect()}
+
+
+def test_simhash_arrow_matches_jvm(spark, sf_dir):
+    # signatures must equal the interpreted Spark vote fold, on the
+    # sf0.01 corpus and on degenerate texts
+    from datafusion_python_spark.operators.dedup import simhash
+
+    docs = _sf0_01_docs(spark, sf_dir)
+    edf = spark.createDataFrame(EDGE_DOCS, "doc_id int, text string")
+    for hasher in ("xxhash64", "md5"):
+        for df in (docs, edf):
+            got = {r.doc_id: r.simhash for r in simhash(df, "text", hasher=hasher).select("doc_id", "simhash").collect()}
+            assert got == _reference_simhash(df, hasher) and len(got) > 0
+    # empty and null text produce signature 0
+    got = {r.doc_id: r.simhash for r in simhash(edf, "text").collect()}
+    assert got[3] == 0 and got[4] == 0
+
+
+def _reference_minhash(df, shingle_k):
+    # the interpreted family-min fold the kernel replaced:
+    # family i = array_min over shingle hashes h of xxhash64(h, i)
+    from datafusion_python_spark.operators.dedup import (
+        _norm_text,
+        _shingle_hashes_from_words,
+    )
+
+    words = F.filter(F.split(_norm_text(F.col("text")), " "), lambda x: x != "")
+    staged = df.withColumn("__w", words).withColumn(
+        "__shh", _shingle_hashes_from_words(F.col("__w"), shingle_k)
+    )
+    sig = F.transform(
+        F.sequence(F.lit(0), F.lit(31)),
+        lambda i: F.array_min(F.transform(F.col("__shh"), lambda h: F.xxhash64(h, i))),
+    )
+    return {r.doc_id: list(r.minhash) for r in staged.select("doc_id", sig.alias("minhash")).collect()}
 
 
 def test_minhash_arrow_matches_jvm(spark, sf_dir):
     # numpy xxh64 twins must be bit-exact vs Spark, including the
     # IntegerType (4-byte) path that xxhash64(h, i) chains through.
-    import numpy as np
-
-    from pyspark.sql import functions as F
-
     from datafusion_python_spark.operators.dedup import (
         _xxh64_int,
         _xxh64_long,
         minhash_signature,
-        minhash_signature_arrow,
     )
-    from datafusion_python_spark.tables import load_table
 
     vals = [0, 1, -1, 42, 2**63 - 1, -(2**63), 123456789123456789]
     df = spark.createDataFrame([(v, i) for v in vals for i in range(3)], "h long, i int")
@@ -589,49 +705,35 @@ def test_minhash_arrow_matches_jvm(spark, sf_dir):
     ours = _xxh64_int(ii, _xxh64_long(hh, np.uint64(42))).view(np.int64)
     assert list(ours) == jvm
 
-    docs = load_table(spark, sf_dir, "documents")
-    # arrow=False pins the JVM fold as the comparison arm (the default
-    # xxhash64 path routes to the arrow kernel since r12)
-    a = {r.doc_id: list(r.minhash) for r in minhash_signature(docs, "text", arrow=False).select("doc_id", "minhash").collect()}
-    b = {r.doc_id: list(r.minhash) for r in minhash_signature_arrow(docs, "text").select("doc_id", "minhash").collect()}
-    assert a == b and len(a) > 0
-    # degenerate texts: short, empty, null — all stage a 1-hash array
-    edf = spark.createDataFrame(
-        [(1, "hello world foo bar"), (2, "x"), (3, ""), (4, None)],
-        "doc_id int, text string",
-    )
-    a = {r.doc_id: list(r.minhash) for r in minhash_signature(edf, "text", arrow=False).collect()}
-    b = {r.doc_id: list(r.minhash) for r in minhash_signature_arrow(edf, "text").collect()}
-    assert a == b
-    # shingle_k=1 degenerates: empty/null text stages an EMPTY (resp.
-    # NULL) hash array, and the JVM fold yields [null]*num_hashes — the
-    # kernel must reproduce those rows exactly (r12, found when routing
-    # the xxhash64 default through the kernel)
-    a1 = {
-        r.doc_id: list(r.minhash)
-        for r in minhash_signature(edf, "text", shingle_k=1, arrow=False).collect()
-    }
-    b1 = {
-        r.doc_id: list(r.minhash)
-        for r in minhash_signature_arrow(edf, "text", shingle_k=1).collect()
-    }
-    assert a1 == b1
-    assert a1[3] == [None] * 32 and a1[4] == [None] * 32
+    # signatures equal the interpreted fold on the sf0.01 corpus and on
+    # degenerate texts (short, empty, null), at k=1 and k=3
+    docs = _sf0_01_docs(spark, sf_dir)
+    edf = spark.createDataFrame(EDGE_DOCS, "doc_id int, text string")
+    for k in (1, 3):
+        for df in (docs, edf):
+            got = {
+                r.doc_id: list(r.minhash)
+                for r in minhash_signature(df, "text", shingle_k=k).select("doc_id", "minhash").collect()
+            }
+            assert got == _reference_minhash(df, k) and len(got) > 0
+    # k=1 degenerates: empty/null text stages an EMPTY (resp. NULL)
+    # hash array, whose min is NULL per family
+    got = {r.doc_id: list(r.minhash) for r in minhash_signature(edf, "text", shingle_k=1).collect()}
+    assert got[3] == [None] * 32 and got[4] == [None] * 32
 
 
 def test_xxh64_twins_random_sweep(spark):
     # 20k seeded-random (long, int) pairs through both engines in one
     # shot — hardens the bit-parity claim beyond hand-picked edges.
-    import numpy as np
+    import warnings
 
-    from pyspark.sql import functions as F
+    import pandas as pd
 
     from datafusion_python_spark.operators.dedup import _xxh64_int, _xxh64_long
 
     rng = np.random.default_rng(0xD5)
     hs = rng.integers(-(2**63), 2**63 - 1, size=20_000, dtype=np.int64)
     iis = rng.integers(-(2**31), 2**31 - 1, size=20_000, dtype=np.int32)
-    import pandas as pd
 
     df = spark.createDataFrame(pd.DataFrame({"h": hs, "i": iis}))
     jvm = np.array(
@@ -641,6 +743,16 @@ def test_xxh64_twins_random_sweep(spark):
         iis.view(np.uint32), _xxh64_long(hs.view(np.uint64), np.uint64(42))
     ).view(np.int64)
     assert (ours == jvm).all()
+    # the minhash kernel passes a SCALAR family index: same bits, and the
+    # intended uint64 wraparound must not surface as an overflow warning
+    jvm5 = np.array(
+        [r[0] for r in df.select(F.xxhash64("h", F.lit(5))).collect()], dtype=np.int64
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        inner = _xxh64_long(hs.view(np.uint64), np.uint64(42))
+        ours5 = _xxh64_int(np.uint32(5), inner).view(np.int64)
+    assert (ours5 == jvm5).all()
 
 
 def test_jaccard_prefix_filter_matches_plain(spark, sf_dir):

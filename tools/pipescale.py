@@ -199,16 +199,12 @@ def op_minhash_lsh(spark, d, n):
     return lsh_candidate_pairs(sig, "doc_id", num_bands=8)
 
 
-# simhash measures the Arrow scale path for the SIGNATURE stage
-# (JVM-staged word hashes + numpy bit voting — the 64 interpreted
-# aggregate folds were 17.5 s of the 48.5 s at 64x; the kernel does
-# the same votes in 1.75 s, signatures identical by construction).
-# The quarter-block pair join stays JVM — it is the documented pair
-# generator, not a fold cost.
+# simhash: JVM-staged word hashes + numpy bit-vote kernel; the
+# quarter-block pair join is the documented pair generator.
 def op_simhash(spark, d, n):
-    from datafusion_python_spark.operators.dedup import simhash_arrow, simhash_near_dups
+    from datafusion_python_spark.operators.dedup import simhash, simhash_near_dups
 
-    return simhash_near_dups(simhash_arrow(_docs(spark, d), "text"), "doc_id", max_hamming=3)
+    return simhash_near_dups(simhash(_docs(spark, d), "text"), "doc_id", max_hamming=3)
 
 
 def op_quality(spark, d, n):
@@ -236,18 +232,17 @@ def op_cosine_topk(spark, d, n):
     return cosine_topk(_emb(spark, d).filter(F.col("vec_id") != 0), q, k=10)
 
 
-# ivf_ann / semantic_dedup measure the Arrow scale path (arrow=True:
-# batch-matmul assignment + fused per-cluster kernel) — the production
-# choice once n_list/n_clusters grow past a few dozen. The r5 JVM-path
-# numbers (66.5 s / 244.9 s at 64x) are kept in PIPESCALE.md as the
-# comparison row; decision parity JVM==arrow is pytest-asserted.
+# ivf_ann runs the batch-matmul assignment + rerank kernels;
+# semantic_dedup measures its fused per-cluster path (arrow=True). The
+# r5 all-JVM numbers (66.5 s / 244.9 s at 64x) are kept in PIPESCALE.md
+# as the comparison row.
 def op_ivf_ann(spark, d, n):
     from datafusion_python_spark.operators.similarity import ivf_ann
 
     corpus = _emb(spark, d).filter(F.col("vec_id") != 0)
     q = _qvec(spark, d)
     n_list = max(8, int(math.sqrt(n * 2000)))
-    return ivf_ann(corpus, q, n_list=n_list, n_probe=2, k=10, arrow=True)
+    return ivf_ann(corpus, q, n_list=n_list, n_probe=2, k=10)
 
 
 def op_semantic_dedup(spark, d, n):
@@ -726,19 +721,19 @@ def main() -> None:
         ]
     if {"ivf_ann", "semantic_dedup", "simhash"} & set(results):
         lines += [
-            "ivf_ann / semantic_dedup / simhash rows are the Arrow "
-            "scale paths: batch-matmul assignment for ivf_ann; "
-            "semantic_dedup additionally fuses assignment → one "
-            "groupBy(cell) → per-cluster survivor kernel (no LeftAnti "
-            "join, no doubled assignment); simhash keeps the word "
-            "hashes JVM-side and moves only the 64 interpreted "
-            "bit-vote folds into a numpy kernel. The r5 JVM-path "
-            "measurements on identical data were ivf_ann 66.46 s "
-            "(1,926 rows/s), semantic_dedup 244.89 s (523 rows/s), "
-            "and simhash 48.55 s (6,591 rows/s) at 64x — "
-            "92x / 102x / 3.6x on the same decision rules (JVM==arrow "
-            "parity pytest-asserted at sf0.01; simhash signatures "
-            "identical by construction).",
+            "ivf_ann / semantic_dedup / simhash rows run numpy "
+            "kernels over Arrow batches, the operators' only "
+            "assignment/vote paths: batch-matmul assignment and rerank "
+            "for ivf_ann; semantic_dedup (arrow=True) additionally "
+            "fuses assignment → one groupBy(cell) → per-cluster "
+            "survivor kernel (no LeftAnti join, no doubled assignment); "
+            "simhash keeps the word hashes JVM-side and votes in numpy. "
+            "The r5 interpreted-fold measurements on identical data "
+            "were ivf_ann 66.46 s (1,926 rows/s), semantic_dedup "
+            "244.89 s (523 rows/s), and simhash 48.55 s (6,591 rows/s) "
+            "at 64x — 92x / 102x / 3.6x on the same decision rules "
+            "(kernels checked against reference folds and brute force "
+            "in pytest; simhash signatures identical by construction).",
             "",
         ]
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PIPESCALE.md"), "w") as fh:

@@ -222,10 +222,7 @@ def build_emb(spark, n: int) -> str:
 
 def run_emb_size(spark, n: int) -> dict:
     from datafusion_python_spark.operators.semdedup import semantic_dedup
-    from datafusion_python_spark.operators.similarity import (
-        cosine_topk_arrow,
-        ivf_ann,
-    )
+    from datafusion_python_spark.operators.similarity import cosine_topk, ivf_ann
 
     d = build_emb(spark, n)
     emb = spark.read.parquet(f"{d}/embeddings.parquet")
@@ -246,29 +243,25 @@ def run_emb_size(spark, n: int) -> dict:
     # --- brute-force cosine top-k: the planted copy pair must lead
     q = emb.filter(F.col("vec_id") == 0).head()["embedding"]
     q = [float(v) for v in q]
-    sec, _ = _timed(cosine_topk_arrow(emb, q, k=10))
-    brute = [r["vec_id"] for r in cosine_topk_arrow(emb, q, k=10).collect()]
-    res["cosine_topk_arrow"] = {
+    sec, _ = _timed(cosine_topk(emb, q, k=10))
+    brute = [r["vec_id"] for r in cosine_topk(emb, q, k=10).collect()]
+    res["cosine_topk"] = {
         "sec": round(sec, 2),
         "out_rows": 10,
         "verify": f"planted copies {{0,3}} in top-10: {sorted(brute[:2])}",
         "ok": {0, 3} <= set(brute),
     }
 
-    # --- IVF ANN (Arrow): probing ~2.5% of cells must still surface the
-    # planted pair (the query IS their vector, so their cell ranks first)
+    # --- IVF ANN: probing ~2.5% of cells must still surface the planted
+    # pair (the query IS their vector, so their cell ranks first)
     n_probe = max(2, n_clusters // 40)
-    sec, _ = _timed(
-        ivf_ann(emb, q, n_list=n_clusters, n_probe=n_probe, k=10, arrow=True)
-    )
+    sec, _ = _timed(ivf_ann(emb, q, n_list=n_clusters, n_probe=n_probe, k=10))
     ivf_ids = [
         r["vec_id"]
-        for r in ivf_ann(
-            emb, q, n_list=n_clusters, n_probe=n_probe, k=10, arrow=True
-        ).collect()
+        for r in ivf_ann(emb, q, n_list=n_clusters, n_probe=n_probe, k=10).collect()
     ]
     recall = len(set(ivf_ids) & set(brute)) / 10
-    res["ivf_ann_arrow"] = {
+    res["ivf_ann"] = {
         "sec": round(sec, 2),
         "out_rows": 10,
         "verify": f"planted {{0,3}} found, recall@10 vs brute = {recall:.2f} "
