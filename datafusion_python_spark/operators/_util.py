@@ -20,28 +20,102 @@ def shuffle_partitions(spark, default: int = 200) -> int:
         return default
 
 
-def spread_small_input(df):
-    """Round-robin repartition a small-scan input up to the session's
-    default parallelism so expensive per-row compute downstream (e.g.
-    the 32-family MinHash fold) doesn't ride a handful of file splits.
+# Leaves whose input RDD (and so its split count) exists once the plan is
+# built: a file scan, a local relation, an existing (e.g. checkpointed) RDD.
+_RDD_LEAVES = {"FileSourceScanExec", "LocalTableScanExec", "RDDScanExec"}
 
-    Scale-adaptive by construction: a production-sized input already
-    has >= cores file splits (128 MB each), so this is a NO-OP there —
-    it only fires when the scan yields fewer partitions than the
-    session has cores (small files / single row-group parquet), where
-    the text shuffle it adds is by definition tiny. Without it, every
-    projection between the scan and the first exchange — including the
-    whole signature pipeline — runs serially on the scan's 1-2 tasks
-    (measured: the sf0.1 banded-table build is a single-task stage).
+
+def _streamed_partitions(plan) -> int | None:
+    """Partition count of ``plan``'s streamed path, read from the
+    un-executed physical plan, or None when only running it would tell.
+
+    Walks down from the root, skipping ``BroadcastExchangeExec`` build
+    sides, through every single-child operator that keeps its child's
+    partition count, to the node that sets the count:
+
+    - a leaf in ``_RDD_LEAVES`` gives its input RDD's split count, a
+      range its slice count;
+    - a ``repartition(n)`` exchange (origin ``REPARTITION_BY_NUM``) gives
+      n — AQE never coalesces an explicit count;
+    - any other exchange (AQE picks its count at run time) and any other
+      operator give None.
     """
-    spark = df.sparkSession
-    try:
-        target = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() >= target:
-            return df
-    except Exception:
+    node = plan
+    while True:
+        cls = node.getClass().getSimpleName()
+        if cls in _RDD_LEAVES:
+            return len(node.inputRDD().partitions())
+        if cls == "RangeExec":
+            return node.numSlices()
+        if cls == "ShuffleExchangeExec":
+            if node.shuffleOrigin().toString() == "REPARTITION_BY_NUM":
+                return node.outputPartitioning().numPartitions()
+            return None
+        children = node.children()
+        streamed = [
+            child
+            for child in (children.apply(i) for i in range(children.size()))
+            if child.getClass().getSimpleName() != "BroadcastExchangeExec"
+        ]
+        if len(streamed) != 1 or (
+            streamed[0].outputPartitioning().numPartitions()
+            != node.outputPartitioning().numPartitions()
+        ):
+            return None
+        node = streamed[0]
+
+
+def spread_small_input(df):
+    """Round-robin repartition a small input up to the session's default
+    parallelism so expensive per-row compute downstream (e.g. the
+    32-family MinHash fold) doesn't ride a handful of file splits.
+
+    Decided at planning time; it never runs a job. Asking the executed
+    frame (``df.rdd.getNumPartitions()``) makes AQE run every broadcast
+    and shuffle stage upstream, and the caller's query later runs them
+    all again. Instead the rule reads the initial physical plan
+    (``AdaptiveSparkPlanExec.initialPlan``, the plan itself without
+    AQE) along the streamed path (:func:`_streamed_partitions`):
+
+    - a scan leaf or ``repartition(n)`` exchange with a known count
+      spreads when that count is below the target — so a corpus scan
+      with >= cores splits (128 MB each at production scale) passes
+      through unchanged, even behind broadcast joins;
+    - when the count is decided only at run time (a join or aggregate
+      exchange, which AQE coalesces by size, or any operator that
+      changes the count), the input spreads when the optimized plan's
+      ``sizeInBytes`` is below ``target`` advisory partitions
+      (``spark.sql.adaptive.advisoryPartitionSizeInBytes``), so the
+      rule stays a no-op on a large shuffled input.
+
+    A plan's reported ``outputPartitioning`` is no substitute: a file
+    scan reports ``UnknownPartitioning(0)`` before it runs, so "unknown"
+    does not mean "small", and spreading on it would add a round-robin
+    exchange after a scan that is already wide.
+
+    Without the spread, every projection between a few-split scan and
+    the first exchange — including the whole signature pipeline — runs
+    serially on the scan's 1-2 tasks (measured: the sf0.1 banded-table
+    build is a single-task stage).
+    """
+    if df.isStreaming:
+        # no batch plan to read: each micro-batch keeps the source's layout
         return df
-    return df.repartition(target)
+    spark = df.sparkSession
+    target = spark.sparkContext.defaultParallelism
+    qe = df._jdf.queryExecution()
+    plan = qe.executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.initialPlan()
+    n = _streamed_partitions(plan)
+    if n is None:
+        advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        )
+        small = qe.optimizedPlan().stats().sizeInBytes() < target * advisory
+    else:
+        small = n < target
+    return df.repartition(target) if small else df
 
 
 def murmur3_int32(value: int, seed: int = 42) -> int:

@@ -17,6 +17,10 @@ one canonical doc per cluster. This is iterative min-label propagation
   near-cliques, so 3–5 rounds converge; convergence is detected by
   counting label changes (one cheap action per round).
 
+Canonical selection (:func:`canonical_docs`) is then one anti-join of
+the docs against the labelled nodes that are not their component's
+minimum — a drop set as large as the duplicates, not the corpus.
+
 Reference parity: apache/datafusion-python has no graph operator; this
 extends the suite for LLM-training-data pipelines (transitive MinHash
 dedup a la C4/RefinedWeb).
@@ -26,6 +30,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _symmetric_edges(pairs: DataFrame, src: str, dst: str) -> DataFrame:
+    """Distinct directed edges (s, d) in both directions of every pair,
+    from ONE read of ``pairs``: a union of the two projections would
+    plan (and run) the pair computation twice."""
+    a, b = F.col(src), F.col(dst)
+    both = F.array(F.struct(a.alias("s"), b.alias("d")), F.struct(b.alias("s"), a.alias("d")))
+    return pairs.select(F.explode(both).alias("e")).select("e.s", "e.d").distinct()
 
 
 def connected_components(
@@ -53,15 +66,13 @@ def connected_components(
     # UnknownPartitioning, measured in plans/r11/pipe_dedup_cluster_
     # before.txt, which is exactly why the old per-round plans paid an
     # edges exchange per iteration at scale). Cache-not-checkpoint is
-    # safe for edges: eviction recomputes a pure union+distinct, there is
+    # safe for edges: eviction recomputes a pure explode+distinct, there is
     # no iterated lineage to truncate. The per-round LABEL table keeps
     # the eager localCheckpoint — it is re-derived every round, so its
     # lineage must be cut, and it is the nodes-sized (smaller) side.
     n_part = shuffle_partitions(pairs.sparkSession)
     edges = (
-        pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .union(pairs.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-        .distinct()
+        _symmetric_edges(pairs, src, dst)
         .repartition(n_part, "d")
         .cache()
     )
@@ -139,7 +150,17 @@ def canonical_docs(
     pairs: DataFrame,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Keep one canonical doc per duplicate cluster (the min id)."""
-    clustered = dedup_clusters(docs, pairs, id_col=id_col)
-    keep = clustered.filter(F.col(id_col) == F.col("cluster_id")).select(id_col)
-    return docs.join(keep, id_col, "left_semi")
+    """Keep one canonical doc per duplicate cluster (the min id).
+
+    The same rows as keeping the docs whose :func:`dedup_clusters` id is
+    their own, computed as ``docs ⋉anti drop`` where ``drop`` holds the
+    labelled nodes that are not their component's minimum. ``docs`` is
+    read once, and ``drop`` grows with the duplicates, not the corpus.
+    Docs with a null id are dropped, as the equality test drops them in
+    the cluster form.
+    """
+    comp = connected_components(pairs)
+    drop = comp.filter(F.col("node") != F.col("component")).select("node")
+    return docs.filter(F.col(id_col).isNotNull()).join(
+        drop, docs[id_col] == drop["node"], "left_anti"
+    )

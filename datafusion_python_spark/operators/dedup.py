@@ -123,7 +123,8 @@ def minhash_signature(
     concat per family) but bit-identical in any engine with md5, which
     is what lets the LSH gate run against a full DuckDB oracle.
 
-    The input is spread first (see spread_small_input): every
+    The input is spread first when the plan shows it is small (see
+    spread_small_input; decided while planning, no job runs): every
     projection up to the first exchange rides the scan's parallelism,
     and the signature stage is the costliest map work in the module.
     """
@@ -318,10 +319,11 @@ def _simhash_word_hashes(df: DataFrame, text_col: str, hasher: str) -> DataFrame
     md5-conv word hashes are engine hashes a Python kernel can't
     reproduce bit-for-bit, so only the bit vote moves to numpy.
 
-    The input is spread first (see spread_small_input): the vote stage
-    downstream is the costliest map work in the simhash family and rides
-    the scan's parallelism; a single-row-group corpus runs it serially
-    otherwise. No-op at production scale."""
+    The input is spread first when the plan shows it is small (see
+    spread_small_input; decided while planning, no job runs): the vote
+    stage downstream is the costliest map work in the simhash family and
+    rides the scan's parallelism; a single-row-group corpus runs it
+    serially otherwise. No-op at production scale."""
     df = spread_small_input(df)
     words = F.filter(F.split(_norm_text(F.col(text_col)), " "), lambda w: w != "")
     if hasher == "xxhash64":
@@ -768,7 +770,7 @@ def ngram_jaccard_pairs_prefix(
     # (normalize + split + distinct) as map work BEFORE its first
     # exchange, i.e. at the scan's parallelism — spread a few-partition
     # input once so all four passes run wide (no-op at production
-    # scale; see spread_small_input).
+    # scale; decided from the plan without a job, see spread_small_input).
     df = spread_small_input(df)
     words = df.select(
         F.col(id_col).alias("doc"),
@@ -842,7 +844,8 @@ def ngram_jaccard_pairs(
     MinHash candidate generator at scale.
     """
     # per-doc tokenize rides the scan parallelism (see the prefix
-    # variant's comment) — spread a few-partition input first
+    # variant's comment) — spread a few-partition input first, decided
+    # from the plan without a job (see spread_small_input)
     df = spread_small_input(df)
     words = df.select(
         F.col(id_col).alias("doc"),

@@ -524,7 +524,8 @@ def cosine_near_dup_pairs(
     is what explodes, so this cuts the dominant term ~3× while keeping
     the cosine expression ``dot/(na*nb)`` bit-identical to before.
 
-    The input is spread first (see spread_small_input): the per-pair
+    The input is spread first when the plan shows it is small (see
+    spread_small_input; decided while planning, no job runs): the per-pair
     dot fold runs at the STREAMED side's parallelism — for the exact
     path that is a BroadcastNestedLoopJoin whose task count equals the
     scan's partition count, so a single-row-group input evaluates every

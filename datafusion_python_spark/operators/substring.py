@@ -56,7 +56,8 @@ def span_index(
 ) -> DataFrame:
     """(id, pos, h): every k-token window of every doc. Map-only.
 
-    The input is spread first (see spread_small_input): the per-doc
+    The input is spread first when the plan shows it is small (see
+    spread_small_input; decided while planning, no job runs): the per-doc
     tokenize + k-window hash explode is this module's costliest map
     work and runs BEFORE the span-hash exchange, i.e. at the scan's
     parallelism — a single-row-group corpus runs it serially otherwise

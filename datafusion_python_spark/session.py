@@ -1,6 +1,7 @@
 """SparkSession factory tuned for the spark-graft environment.
 
-Local mode is `local[$SPARK_GRAFT_CPUS]` (default 32 threads, single JVM).
+Local mode is `local[$SPARK_GRAFT_CPUS]` (default: the CPUs this process
+may run on, ``os.sched_getaffinity``; single JVM).
 All knobs here are chosen for 100 TB-scale semantics even though tests run
 locally: AQE on (runtime re-planning, skew-join handling, partition
 coalescing), shuffle partitions sized to the local core count (a real
@@ -104,7 +105,7 @@ def get_spark(app_name: str = "datafusion_python_spark", **overrides: str) -> Sp
     if _CREATOR_PID is not None and _CREATOR_PID != os.getpid():
         _reset_inherited_jvm_state()
         _CREATOR_PID = None
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
     conf = dict(_DEFAULTS)
     conf.update({k: str(v) for k, v in overrides.items()})

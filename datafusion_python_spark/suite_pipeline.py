@@ -1698,8 +1698,8 @@ def pipe_curation_e2e(spark, sf_dir):
 
     from .operators._util import spread_small_input
 
-    # Spread a few-partition corpus scan first (no-op at production
-    # scale): stages 1-5's map work — quality/repetition features, the
+    # Spread a few-partition corpus scan first (decided from the plan
+    # without a job; no-op at production scale): stages 1-5's map work — quality/repetition features, the
     # hashed-BoW score, the PII regex chain, decontamination grams —
     # otherwise all run BEFORE the chain's first corpus exchange, i.e.
     # serially on the scan's single sf0.1 task. Measured (interleaved

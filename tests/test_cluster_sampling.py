@@ -53,6 +53,91 @@ def test_dedup_clusters_and_canonical(spark):
     assert kept == [0, 1, 2, 3]
 
 
+def _sorted_rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _canonical_by_clusters(docs, pairs, id_col="doc_id"):
+    """canonical_docs' defining form: the docs whose dedup_clusters id is
+    their own (docs semi-joined with that keep set)."""
+    keep = (
+        dedup_clusters(docs, pairs, id_col=id_col)
+        .filter(F.col(id_col) == F.col("cluster_id"))
+        .select(id_col)
+    )
+    return docs.join(keep, id_col, "left_semi")
+
+
+@pytest.mark.parametrize(
+    "pair_rows",
+    [
+        # chain 1-2-4; 5's min neighbour 3 and 99 are absent from docs;
+        # 98 (absent) pairs with its smaller doc 7; 100-101 both absent
+        [(1, 2), (2, 4), (3, 5), (5, 99), (98, 7), (100, 101)],
+        # a null endpoint and a self-loop
+        [(None, 4), (4, 4), (1, 2)],
+        # docs with no pairs at all
+        [],
+    ],
+)
+def test_canonical_docs_matches_cluster_definition(spark, pair_rows):
+    docs = spark.createDataFrame(
+        [(0, "a"), (1, "b"), (1, "b2"), (2, "c"), (None, "n1"), (None, "n2"),
+         (4, "d"), (5, "e"), (7, "g")],
+        "doc_id long, text string",
+    )
+    pairs = spark.createDataFrame(pair_rows, "id_a long, id_b long")
+    got = _sorted_rows(canonical_docs(docs, pairs))
+    assert got == _sorted_rows(_canonical_by_clusters(docs, pairs))
+    # null ids never survive; duplicate ids survive together
+    assert all(r[0] is not None for r in got)
+    assert [r for r in got if r[0] == 1] == [(1, "b"), (1, "b2")]
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_one_pass_edges_match_union_form(spark, seed):
+    import random
+
+    from datafusion_python_spark.operators.cluster import _symmetric_edges
+
+    rng = random.Random(seed)
+    n = 40
+    rows = [(rng.randrange(n), rng.randrange(n)) for _ in range(60)]
+    rows += [rows[0], (rows[1][1], rows[1][0])]  # a duplicate and a reversed pair
+    if seed % 2:
+        rows.append((None, 3))
+    # mixed widths: the one-pass array must coerce like the union does
+    schema = "id_a int, id_b long" if seed == 3 else "id_a long, id_b long"
+    pairs = spark.createDataFrame(rows, schema)
+    union = (
+        pairs.select(F.col("id_a").alias("s"), F.col("id_b").alias("d"))
+        .union(pairs.select(F.col("id_b").alias("s"), F.col("id_a").alias("d")))
+        .distinct()
+    )
+    one_pass = _symmetric_edges(pairs, "id_a", "id_b")
+    assert one_pass.schema == union.schema
+    assert _sorted_rows(one_pass) == _sorted_rows(union)
+
+    # and the fixpoint over them is union-find's min-label partition
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in rows:
+        ends = [find(x) for x in (a, b) if x is not None]  # a null end: just a node
+        parent[max(ends)] = min(ends)
+    want = {x: find(x) for x in parent}
+    got = {
+        r["node"]: r["component"]
+        for r in connected_components(pairs).collect()
+        if r["node"] is not None
+    }
+    assert got == want
+
+
 def test_hash_sample_deterministic_and_partition_invariant(spark):
     df = spark.range(0, 2000).withColumnRenamed("id", "k")
     a = sorted(r["k"] for r in hash_sample(df, "k", 0.2).collect())

@@ -462,10 +462,6 @@ def main() -> None:
     print("wrote PIPESCALE_XL.md")
 
 
-if __name__ == "__main__":
-    main()
-
-
 # --------------------------------------------------------------------------
 # Curation chain at XL size (r12, VERDICT r11 ask #3): the
 # pipe_curation_e2e stage sequence on the planted corpus, with EVERY
@@ -720,3 +716,7 @@ def run_curation_size(spark, n: int, per_stage: bool = True) -> dict:
     res["sec"] = round(time.time() - t0, 2)
     res["docs_per_sec"] = int(n / res["sec"])
     return res
+
+
+if __name__ == "__main__":
+    main()
