@@ -21,6 +21,16 @@ Canonical selection (:func:`canonical_docs`) is then one anti-join of
 the docs against the labelled nodes that are not their component's
 minimum — a drop set as large as the duplicates, not the corpus.
 
+Cache contract: :func:`canonical_docs` persists ``docs`` (memory and
+disk, the ``persist()`` default) before the pairs are planned, and the
+docs stay cached after it returns. When ``pairs`` is derived from
+``docs`` (the curation chain: docs → minhash → LSH edges), the
+signature kernel and the final anti-join both read that one cached
+copy instead of computing ``docs`` twice; at 100 TB one write and read
+of the docs replaces recomputing their corpus-wide shuffles. The
+caller releases it with ``docs.unpersist()`` or
+``spark.catalog.clearCache()``.
+
 Reference parity: apache/datafusion-python has no graph operator; this
 extends the suite for LLM-training-data pipelines (transitive MinHash
 dedup a la C4/RefinedWeb).
@@ -158,7 +168,17 @@ def canonical_docs(
     read once, and ``drop`` grows with the duplicates, not the corpus.
     Docs with a null id are dropped, as the equality test drops them in
     the cluster form.
+
+    ``docs`` is persisted (memory and disk) before
+    :func:`connected_components` plans anything, and stays cached after
+    this returns. Spark substitutes a cached plan wherever it recurs in
+    a query planned later, so when ``pairs`` was built lazily from
+    ``docs`` (:func:`~datafusion_python_spark.operators.dedup.lsh_star_edges`
+    runs nothing while it builds), the edge build and the anti-join both
+    read the cached docs: ``docs`` is computed once per call. Release it
+    with ``docs.unpersist()`` or ``spark.catalog.clearCache()``.
     """
+    docs = docs.persist()
     comp = connected_components(pairs)
     drop = comp.filter(F.col("node") != F.col("component")).select("node")
     return docs.filter(F.col(id_col).isNotNull()).join(

@@ -13,6 +13,7 @@ of the O(n²) self-join.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ._util import shuffle_partitions, spread_small_input
@@ -291,17 +292,18 @@ def lsh_candidate_pairs(
     signature pipeline (at scale, stage the banded table once — this is
     the single-cluster equivalent of writing it to a staging table).
 
-    Deliberately NOT repartition(band, band_hash)+cache (the r11 trick
-    that pays off in :func:`lsh_star_edges` and connected_components):
-    pinning the bucket layout would remove both self-join exchanges, but
-    it also pins every hot LSH bucket into one task and — because an
-    InMemoryRelation's partitioning is fixed — takes AQE's skew-join
-    splitting OFF the table for a join whose per-bucket work is
-    QUADRATIC in bucket size. Measured on the 64x replica-saturated
-    corpus (interleaved A/B, best-of-4): checkpoint 15.2 s vs pinned
-    cache 20.9 s (medians 20.2 vs 30.3) — the skew-split exchanges are
-    cheaper than the stragglers they prevent. The star form keeps the
-    pin because its per-bucket work is linear.
+    Deliberately NOT repartition(band, band_hash)+cache (the trick
+    connected_components uses for its edges): pinning the bucket layout
+    would remove both self-join exchanges, but it also pins every hot
+    LSH bucket into one task and — because an InMemoryRelation's
+    partitioning is fixed — takes AQE's skew-join splitting OFF the
+    table for a join whose per-bucket work is QUADRATIC in bucket size.
+    Measured on the 64x replica-saturated corpus (interleaved A/B,
+    best-of-4): checkpoint 15.2 s vs pinned cache 20.9 s (medians 20.2
+    vs 30.3) — the skew-split exchanges are cheaper than the stragglers
+    they prevent. The star form
+    (:func:`lsh_star_edges`) needs no stage: it reads the banded rows
+    once, in one window.
     """
     banded = _banded(sig_df, id_col, num_bands, sig_col).localCheckpoint(eager=False)
     a = banded.select(F.col("band"), F.col("band_hash"), F.col(id_col).alias("id_a"))
@@ -465,40 +467,31 @@ def lsh_star_edges(
     id yields the SAME connected components with edges linear in bucket
     size instead of quadratic. This is what survives a corpus where one
     document has 10^5 near-copies (the all-pairs join is O(10^10) there).
-    One shuffle keyed on (band, band_hash), then a map-side min-join.
     Use :func:`lsh_candidate_pairs` when per-pair scores (verify step)
-    are needed; use this for clustering. The banded table is
-    materialized once so the mins/members branches share one signature
-    computation — r11: repartition-by-bucket-key + cache instead of
-    localCheckpoint: the preserved hash(band, band_hash) layout feeds
-    the bucket-min aggregate AND the member join back with zero further
-    exchanges, where the checkpoint's UnknownPartitioning forced one
-    per consumer (plans/r11/lsh_star_new_probe.txt). Unlike the pair
-    form (see :func:`lsh_candidate_pairs`, where the same pin LOST),
-    per-bucket work here is LINEAR in bucket size, so pinning a hot
-    bucket into one task is safe. Interleaved A/B on the 64x
-    replica-saturated corpus: 15.1 → 11.4 s best-of-4 (16.4 → 14.9
-    median). The cache entry lives until session eviction (LRU,
-    memory-and-disk); eviction merely recomputes a pure map-side
-    banding. EAGER: building this DataFrame runs the banding job once
-    (same documented eager contract as ``semantic_dedup(max_cell=...)``)
-    — an unmaterialized cached plan is AQE-wrapped and reports no
-    partitioning, so the planner would re-insert the consumer exchanges
-    this pin exists to remove.
+    are needed; use this for clustering.
+
+    One read of the banded rows: a ``min(id)`` window over
+    ``(band, band_hash)`` tags every member with its bucket's minimum,
+    members that are not the minimum become edges, and a distinct
+    removes edges repeated across bands. The plan has one banded-sized
+    exchange, keyed on the bucket, plus the distinct's. Per-bucket work
+    is linear: a hot bucket is buffered (spilling past the window's
+    in-memory threshold) and scanned once. Null ids produce no edge,
+    and a singleton bucket yields none.
+
+    Not a self-join of the banded table against its bucket minima: the
+    two join branches split above the signature kernel and share no
+    exchange there, so each branch runs the kernel and everything
+    between it and the nearest reusable exchange (measured: the final
+    AQE plan holds the ``MapInArrow`` kernel twice). Nothing runs while
+    the frame is built, so a caller that caches the documents upstream
+    (:func:`~datafusion_python_spark.operators.cluster.canonical_docs`)
+    has the signatures read that cache.
     """
-    n_part = shuffle_partitions(sig_df.sparkSession)
-    banded = (
-        _banded(sig_df, id_col, num_bands, sig_col)
-        .repartition(n_part, "band", "band_hash")
-        .cache()
-    )
-    # eager so the pinned layout is visible when consumers are planned
-    banded.count()
-    mins = banded.groupBy("band", "band_hash").agg(
-        F.min(id_col).alias("id_a"), F.count("*").alias("_sz")
-    )
+    bucket = Window.partitionBy("band", "band_hash")
     return (
-        banded.join(mins.filter(F.col("_sz") > 1), ["band", "band_hash"])
+        _banded(sig_df, id_col, num_bands, sig_col)
+        .withColumn("id_a", F.min(id_col).over(bucket))
         .filter(F.col(id_col) != F.col("id_a"))
         .select("id_a", F.col(id_col).alias("id_b"))
         .distinct()

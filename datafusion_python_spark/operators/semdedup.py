@@ -266,20 +266,13 @@ def semantic_dedup(
     out_cols = [f.name for f in out_schema.fields]
 
     def _validated(pdf: pd.DataFrame):
-        if pdf[id_col].isna().any() or pdf[vec_col].isna().any():
-            raise ValueError(
-                "semantic_dedup(arrow=True): null id or embedding values "
-                "are not supported"
-            )
+        # null and zero-norm embeddings never get here: ivf_assign rejects
+        # both before a row has a cell
+        if pdf[id_col].isna().any():
+            raise ValueError("semantic_dedup(arrow=True): null id values are not supported")
         ids = pdf[id_col].to_numpy()
         m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        norms = np.linalg.norm(m, axis=1)
-        if (norms == 0).any():
-            raise ValueError(
-                "semantic_dedup(arrow=True): zero-norm embedding (the JVM "
-                "path raises DIVIDE_BY_ZERO here under ANSI mode)"
-            )
-        return ids, m / norms[:, None]
+        return ids, m / np.linalg.norm(m, axis=1)[:, None]
 
     def survivors(pdf: pd.DataFrame) -> pd.DataFrame:
         # select out_cols explicitly: the placed exchange below carries a

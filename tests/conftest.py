@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import itertools
+
 import pytest
 
 from datafusion_python_spark.session import get_spark
@@ -22,6 +24,24 @@ def spark_ctx():
     from datafusion_python_spark import SessionContext
 
     return SessionContext()
+
+
+_group_ids = itertools.count()
+
+
+def build_jobs(spark, build) -> tuple[int, object]:
+    """(jobs run by ``build()``, its result), counted under a fresh job
+    group after the listener bus has drained."""
+    sc = spark.sparkContext
+    gid = f"plan-build-{next(_group_ids)}"
+    sc.setJobGroup(gid, gid)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(gid)), out
 
 
 def plan_tree(plan: str) -> str:

@@ -4,6 +4,8 @@ per-domain caps, token-budget packing, repetition signals."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -136,6 +138,167 @@ def test_one_pass_edges_match_union_form(spark, seed):
         if r["node"] is not None
     }
     assert got == want
+
+
+def _star_edges_by_join(sig_df, id_col, num_bands):
+    """The cache + bucket-min aggregate + join-back form of the star
+    edges, kept here as the reference for the window form. Returns the
+    edges and the cached banded table (the caller releases it)."""
+    from datafusion_python_spark.operators._util import shuffle_partitions
+    from datafusion_python_spark.operators.dedup import _banded
+
+    n_part = shuffle_partitions(sig_df.sparkSession)
+    banded = (
+        _banded(sig_df, id_col, num_bands, "minhash")
+        .repartition(n_part, "band", "band_hash")
+        .cache()
+    )
+    banded.count()
+    mins = banded.groupBy("band", "band_hash").agg(
+        F.min(id_col).alias("id_a"), F.count("*").alias("_sz")
+    )
+    edges = (
+        banded.join(mins.filter(F.col("_sz") > 1), ["band", "band_hash"])
+        .filter(F.col(id_col) != F.col("id_a"))
+        .select("id_a", F.col(id_col).alias("id_b"))
+        .distinct()
+    )
+    return edges, banded
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_lsh_star_window_matches_join_form(spark, seed):
+    import random
+
+    from datafusion_python_spark.operators.dedup import lsh_star_edges
+
+    rng = random.Random(seed)
+    bands, width = 4, 2
+    # signature values from a small alphabet, so buckets collide
+    rows = [
+        (i, [rng.randrange(4) for _ in range(bands * width)]) for i in range(60)
+    ]
+    rows += [(None, [rng.randrange(4) for _ in range(bands * width)]) for _ in range(3)]
+    rows += [(rows[j][0], [rng.randrange(4) for _ in range(bands * width)]) for j in (1, 2)]
+    rows.append((rows[3][0], rows[3][1]))  # an exact duplicate row
+    # singleton buckets: values no other row draws
+    rows += [(100 + i, [1000 + 10 * i + b for b in range(bands * width)]) for i in range(5)]
+    # one hot bucket: band 0 equal across 80 rows (and a null id in it)
+    hot = [7] * width
+    rows += [(200 + i, hot + [rng.randrange(50) for _ in range(width * (bands - 1))]) for i in range(80)]
+    rows.append((None, hot + [0] * (width * (bands - 1))))
+    rng.shuffle(rows)
+    sig = spark.createDataFrame(rows, "doc_id long, minhash array<bigint>")
+
+    want, banded = _star_edges_by_join(sig, "doc_id", bands)
+    try:
+        want_rows = _sorted_rows(want)
+    finally:
+        banded.unpersist()
+    got = lsh_star_edges(sig, "doc_id", num_bands=bands)
+    assert got.schema == want.schema
+    assert _sorted_rows(got) == want_rows
+    # the hot bucket's members all point at its minimum
+    assert {(200, 200 + i) for i in range(1, 80)} <= set(want_rows)
+
+
+def _chain_docs(spark, sf_dir):
+    """sf0.001 documents plus null ids and a duplicated id (one id, two
+    texts)."""
+    from datafusion_python_spark.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    extra = spark.createDataFrame(
+        [(None, "alpha beta gamma delta"), (None, "x y z"), (3, "an extra copy of id three")],
+        "doc_id long, text string",
+    )
+    return docs.unionByName(extra)
+
+
+def test_canonical_docs_same_with_and_without_persist(spark, sf_dir):
+    from datafusion_python_spark.operators.dedup import lsh_star_edges, minhash_signature
+
+    docs = _chain_docs(spark, sf_dir)
+    sig = minhash_signature(docs, "text", num_hashes=32, shingle_k=3)
+    pairs = lsh_star_edges(sig, "doc_id", num_bands=8)
+    # the canonical_docs body without the persist, computed before
+    # anything is cached
+    drop = connected_components(pairs).filter(F.col("node") != F.col("component"))
+    want = _sorted_rows(
+        docs.filter(F.col("doc_id").isNotNull()).join(
+            drop, docs["doc_id"] == drop["node"], "left_anti"
+        )
+    )
+    try:
+        got = canonical_docs(docs, pairs)
+        # the cache contract: docs stay cached after the call
+        assert docs.is_cached
+        assert _sorted_rows(got) == want
+    finally:
+        docs.unpersist()
+    assert 0 < len(want) < 500
+
+
+def _subtrees(tree: str, name: str):
+    """The formatted-plan subtrees rooted at operators called ``name``
+    (each a list of the operator lines below it)."""
+    lines = tree.split("\n")
+
+    def node(line):
+        m = re.search(r"[A-Za-z=]", line)
+        return (m.start(), line[m.start():]) if m else (len(line), "")
+
+    for i, line in enumerate(lines):
+        depth, text = node(line)
+        if text.startswith(name + " "):
+            below = []
+            for rest in lines[i + 1:]:
+                d, t = node(rest)
+                if d <= depth:
+                    break
+                below.append(t)
+            yield below
+
+
+def test_chain_computes_docs_once(spark, sf_dir):
+    # docs -> minhash -> star edges -> canonical_docs(docs, pairs): the
+    # signature kernel (inside connected components' edge build) and
+    # the final anti-join both read the cached docs, so every doc row
+    # passes the upstream pass-through exactly once
+    from datafusion_python_spark.operators.dedup import lsh_star_edges, minhash_signature
+
+    base = _chain_docs(spark, sf_dir)
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for b in batches:
+            seen.add(b.num_rows)
+            yield b
+
+    docs = base.mapInArrow(count_rows, base.schema)
+    store = spark._jsparkSession.sharedState().statusStore()
+    first = store.executionsList().size()
+    try:
+        sig = minhash_signature(docs, "text", num_hashes=32, shingle_k=3)
+        pairs = lsh_star_edges(sig, "doc_id", num_bands=8)
+        canonical_docs(docs, pairs).write.format("noop").mode("overwrite").save()
+    finally:
+        docs.unpersist()
+    assert seen.value == base.count()
+
+    # the query that fills connected components' edge cache: its
+    # signature kernel (the MapInArrow that has the pass-through below
+    # it) reads the docs' InMemoryTableScan
+    kernels = []
+    executions = store.executionsList()
+    for i in range(first, executions.size()):
+        tree = executions.apply(i).physicalPlanDescription().split("\n\n(1)", 1)[0]
+        kernels += [
+            below for below in _subtrees(tree, "MapInArrow")
+            if any(t.startswith("MapInArrow ") for t in below)
+        ]
+    assert kernels
+    assert all(any(t.startswith("InMemoryTableScan ") for t in below) for below in kernels)
 
 
 def test_hash_sample_deterministic_and_partition_invariant(spark):

@@ -6,6 +6,7 @@ executes the returned plan, so building should run none. Two pins:
 - every ``spread_small_input`` call site builds with zero jobs, on a
   scan behind a broadcast join and on a small shuffled input, and the
   spread decision itself is right for both (and for wide inputs);
+  ``lsh_star_edges`` builds with zero jobs on a shuffled input too;
 - the operators that DO act while building (checkpoints, counts,
   collects) are listed by name; a new one fails the inventory test
   until it is added here with a reason.
@@ -14,7 +15,6 @@ executes the returned plan, so building should run none. Two pins:
 from __future__ import annotations
 
 import ast
-import itertools
 import pathlib
 
 import pytest
@@ -24,22 +24,7 @@ from datafusion_python_spark.operators._util import spread_small_input
 from datafusion_python_spark.plans import explain_str
 from datafusion_python_spark.tables import load_table
 
-_group_ids = itertools.count()
-
-
-def _build_jobs(spark, build) -> tuple[int, object]:
-    """(jobs run by ``build()``, its result), counted under a fresh job
-    group after the listener bus has drained."""
-    sc = spark.sparkContext
-    gid = f"plan-build-{next(_group_ids)}"
-    sc.setJobGroup(gid, gid)
-    try:
-        out = build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(gid)), out
+from conftest import build_jobs  # noqa: E402
 
 
 def _docs(spark, sf_dir):
@@ -106,17 +91,27 @@ def test_spread_sites_build_without_jobs(spark, sf_dir, site, shape):
     table, key, build = _spread_sites()[site]
     base = load_table(spark, sf_dir, table)
     df = _behind_broadcast(base, key) if shape == "behind_broadcast" else _shuffled(base, key)
-    jobs, out = _build_jobs(spark, lambda: build(df))
+    jobs, out = build_jobs(spark, lambda: build(df))
     assert jobs == 0, f"{site} on a {shape} input ran {jobs} job(s) while building"
     # the few-split test tables are small either way: the input is spread
     assert "RoundRobinPartitioning" in explain_str(out)
+
+
+def test_lsh_star_edges_builds_without_jobs(spark, sf_dir):
+    # the star edges are one lazy window pass over the signatures: on a
+    # small shuffled input nothing runs until the caller's query does
+    from datafusion_python_spark.operators.dedup import lsh_star_edges, minhash_signature
+
+    sig = minhash_signature(_shuffled(_docs(spark, sf_dir), "doc_id"), "text", num_hashes=8)
+    jobs, _ = build_jobs(spark, lambda: lsh_star_edges(sig, "doc_id", num_bands=4))
+    assert jobs == 0, f"lsh_star_edges ran {jobs} job(s) while building"
 
 
 def test_spread_decision_from_plan(spark, sf_dir):
     target = spark.sparkContext.defaultParallelism
 
     def decide(df):
-        jobs, out = _build_jobs(spark, lambda: spread_small_input(df))
+        jobs, out = build_jobs(spark, lambda: spread_small_input(df))
         assert jobs == 0
         return out is not df
 
@@ -153,8 +148,6 @@ _EAGER = {
     ("cluster", "connected_components"): {"count", "localCheckpoint"},
     # banded table checkpoint shared by both self-join branches
     ("dedup", "lsh_candidate_pairs"): {"localCheckpoint"},
-    # banded-table cache materialization (pins the bucket layout)
-    ("dedup", "lsh_star_edges"): {"count"},
     # node count (a scalar in every rank) + periodic lineage checkpoint
     ("graph", "pagerank"): {"count", "localCheckpoint"},
     # embedding-dimension probe (one row)

@@ -18,7 +18,7 @@ from datafusion_python_spark.tables import load_table
 
 
 # shared with test_similarity_arrow via conftest (ADVICE r11 #3)
-from conftest import plan_tree as _tree  # noqa: E402
+from conftest import build_jobs, plan_tree as _tree  # noqa: E402
 
 
 def _docs(spark, sf_dir):
@@ -47,25 +47,32 @@ def test_tfidf_no_dl_join(spark, sf_dir):
     assert "dl" not in re.findall(r"Join \w+, \[([^\]]*)\]", plan).__str__()
 
 
-def test_lsh_star_banded_pinned_and_consumed_exchange_free(spark, sf_dir):
-    # §4: the banded table is an InMemoryRelation pre-partitioned on
-    # (band, band_hash), and BOTH consumers (bucket-min aggregate +
-    # member join-back) read it without a further exchange.
+def test_lsh_star_exchanges_only_on_bucket_key(spark, sf_dir):
+    # star form: the banded rows cross ONE exchange, keyed on the
+    # bucket (band, band_hash), into the bucket-min window; the only
+    # other hash exchange is the final distinct's. No cache, no join
+    # (a self-join's branches would each recompute the signatures), and
+    # building the frame runs nothing.
     from datafusion_python_spark.operators.dedup import (
         lsh_star_edges,
         minhash_signature,
     )
 
     sig = minhash_signature(_docs(spark, sf_dir), "text", num_hashes=32, shingle_k=1)
-    edges = lsh_star_edges(sig, "doc_id", num_bands=8)
-    tree = _tree(explain_str(edges))
-    # both legs read the cache
-    assert len(re.findall(r"InMemoryTableScan", tree)) == 2
-    # the only shuffle exchange OUTSIDE the cache-build subtree is the
-    # final distinct (the mins leg may broadcast at test scale); the
-    # cache build's repartition lives under InMemoryRelation
-    pre_cache = tree.split("InMemoryRelation", 1)[0]
-    assert len(re.findall(r"[+:]- Exchange \(\d+\)", pre_cache)) == 1
+    jobs, edges = build_jobs(spark, lambda: lsh_star_edges(sig, "doc_id", num_bands=8))
+    assert jobs == 0
+    plan = explain_str(edges)
+    tree = _tree(plan)
+    assert "InMemoryRelation" not in tree and "InMemoryTableScan" not in tree
+    assert "Join" not in tree
+    assert len(re.findall(r"[+:]- Window \(\d+\)", tree)) == 1
+    # hash exchanges by key (expression ids and partition count dropped);
+    # the input's own spread exchange is round-robin, not a hash
+    keys = re.findall(r"Arguments: hashpartitioning\(([^)]*), \d+\)", plan)
+    assert sorted(re.sub(r"#\d+L?", "", k) for k in keys) == [
+        "band, band_hash",
+        "id_a, id_b",
+    ]
 
 
 def test_lsh_pairs_keeps_checkpoint_not_pinned_cache(spark, sf_dir):

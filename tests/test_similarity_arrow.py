@@ -11,6 +11,7 @@ import os
 from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from datafusion_python_spark.operators.similarity import (
@@ -615,6 +616,30 @@ def test_semantic_dedup_arrow_degenerate_raises(spark):
         semantic_dedup(
             df, n_clusters=1, threshold=0.9, centroids=[[1.0, 0.0]], arrow=True
         ).collect()
+
+
+@pytest.mark.parametrize("max_cell", [None, 1])
+def test_semantic_dedup_arrow_degenerate_rows_rejected(spark, max_cell):
+    # null and zero-norm embeddings are rejected by the assignment
+    # kernel, before any cell kernel runs; a null id reaches the cell
+    # kernel (fused and chunk-pair paths) and is rejected there
+    from datafusion_python_spark.operators.semdedup import semantic_dedup
+
+    cases = [
+        ((2, [0.0, 0.0]), "ivf_assign: zero-norm embedding"),
+        ((2, None), "null values in embedding column"),
+        ((None, [0.5, 0.5]), r"semantic_dedup\(arrow=True\): null id"),
+    ]
+    for (vid, vec), message in cases:
+        df = spark.createDataFrame(
+            [(1, [1.0, 0.0]), (vid, vec), (3, [1.0, 0.0])],
+            "vec_id int, embedding array<double>",
+        )
+        with pytest.raises(Exception, match=message):
+            semantic_dedup(
+                df, n_clusters=1, threshold=0.9, centroids=[[1.0, 0.0]], arrow=True,
+                max_cell=max_cell,
+            ).collect()
 
 
 def _sf0_01_docs(spark, sf_dir):

@@ -500,11 +500,11 @@ def main() -> None:
             runs = 0
             while runs < 3 or (best < 5.0 and runs < 5):
                 # drop Spark-cached intermediates from the warm pass /
-                # previous run: ops that pin a pre-partitioned cache
-                # (lsh_candidate_pairs, lsh_star_edges) would otherwise
-                # plan-match the prior run's InMemoryRelation and skip
-                # the banding compute — every timed run must compute
-                # from the parquet corpus (no cross-run result reuse)
+                # previous run: an op that leaves a cache behind
+                # (canonical_docs' docs) would otherwise plan-match the
+                # prior run's InMemoryRelation and skip its compute —
+                # every timed run must compute from the parquet corpus
+                # (no cross-run result reuse)
                 spark.catalog.clearCache()
                 t0 = time.perf_counter()
                 fn(spark, corpus, factor).write.format("noop").mode("overwrite").save()
